@@ -928,11 +928,25 @@ def _finish(results, total, t_all, prev, skip_latency):
     # enough to keep on the compact line; raw runs live in the file
     compact["build"]["stage_efficiency"] = results["build"]["stage_efficiency"]
     compact["build"]["detail"] = "BENCH/result.json"
+    print(_compact_line(compact))
+
+
+def _compact_line(compact: dict, limit: int = 1800) -> str:
+    """``compact`` as one JSON line of at most ``limit`` chars where
+    possible (never overflow the capture): drop the raw per-query runs
+    first, then the per-stage efficiencies (both stay in
+    BENCH/result.json), and the per-query timed leaves only last."""
     line = json.dumps(compact)
-    if len(line) > 1800:  # belt and braces: never overflow the capture
-        compact.pop("queries", None)
+    for drop in (
+        lambda c: c.pop("queries_runs", None),
+        lambda c: c.get("build", {}).pop("stage_efficiency", None),
+        lambda c: c.pop("queries", None),
+    ):
+        if len(line) <= limit:
+            break
+        drop(compact)
         line = json.dumps(compact)
-    print(line)
+    return line
 
 
 if __name__ == "__main__":

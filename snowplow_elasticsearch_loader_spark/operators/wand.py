@@ -27,9 +27,16 @@ that can still make top-k. Safety argument: a doc with
 ``ub < t`` satisfies ``score <= ub < t <= kth_best``, so exclusion can
 never change the top-k set or its ranking.
 
-Rank identity with the naive path is bit-exact, not just
-rounded-equal: identical idf doubles, identical IEEE expression tree,
-and identical ascending-term accumulation order per doc.
+Scores share idf doubles and the IEEE expression tree of each
+contribution with the naive relational path, and every numpy scorer
+here (this evaluator, ``phrase.py``, the ``QueryEngine`` coordinator
+path) sums a doc's contributions in ascending term order in the order
+``_exact_scores`` pins. That order is not the naive path's: its
+``F.aggregate`` folds left from 0.0 over the term-sorted contributions,
+while numpy adds the first contribution to a sequential sum of the
+rest and turns pairwise past 8 contributions. The two can differ in
+the last bits, so after rounding to 6 places they agree unless a score
+sits on a rounding boundary.
 """
 
 from __future__ import annotations
@@ -80,7 +87,14 @@ def _exact_scores(
     doc: np.ndarray, term_code: np.ndarray, contrib: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Sum contributions per doc in (doc, ascending term) order —
-    the shared accumulation contract."""
+    the shared accumulation contract.
+
+    ``np.add.reduceat`` fixes the order within a doc: for contributions
+    ``c0..cn`` it computes ``c0 + (((0.0 + c1) + c2) + ... + cn)`` when
+    there are at most 8 of them, and ``c0 + pairwise(c1..cn)`` (numpy's
+    8-way unrolled pairwise sum) beyond that.
+    ``tests/test_dense_scoring.py`` pins both cases, and the
+    ``QueryEngine`` dense accumulator reproduces the first."""
     order = np.lexsort((term_code, doc))
     d, c = doc[order], contrib[order]
     starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))

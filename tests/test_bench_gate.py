@@ -85,3 +85,31 @@ def test_gate_sensitivity_also_applies_probe(tmp_path):
 def test_empty_when_no_clean_pairs(tmp_path):
     m = _load_bench(tmp_path, [_e(0.9, 0.80), _e(0.9, 0.95, probe=0.5)])
     assert m._ledger_history(2, 8, 100, ctl_gate=0.93) == {}
+
+
+def test_compact_line_keeps_query_leaves_when_oversized(tmp_path):
+    m = _load_bench(tmp_path, [])
+    names = [f"q_{i}_with_a_long_contract_entry_name" for i in range(9)]
+
+    def result(n_stages):
+        return {
+            "metric": "headline_queries_total_sec",
+            "value": 12.345,
+            "queries": {n: 1.234 for n in names},
+            "queries_runs": {n: [1.2345678] * 30 for n in names},
+            "build": {"turns": 100, "stage_efficiency": {f"stage_{i:03d}_write": 0.9 for i in range(n_stages)}},
+        }
+
+    # the runs alone overflow: only they go
+    out = json.loads(m._compact_line(result(5)))
+    assert "queries_runs" not in out and len(out["build"]["stage_efficiency"]) == 5
+    assert out["queries"] == result(5)["queries"]
+    # runs and stage efficiencies both overflow: both go, all 9 leaves stay
+    line = m._compact_line(result(80))
+    out = json.loads(line)
+    assert len(line) <= 1800
+    assert "queries_runs" not in out and "stage_efficiency" not in out["build"]
+    assert out["queries"] == result(80)["queries"] and len(out["queries"]) == 9
+    # a line that already fits keeps everything
+    small = {"queries": {"q": 1.0}, "queries_runs": {"q": [1.0]}, "build": {"stage_efficiency": {}}}
+    assert json.loads(m._compact_line(dict(small))) == small

@@ -43,6 +43,18 @@ QUERIES = [
 ]
 
 
+def _msearch_batch() -> list[tuple[str, str]]:
+    words = (
+        "error retry timeout agent plan search index query token stream batch merge "
+        "sort join shuffle partition spark kinesis loader elastic the tool call"
+    ).split() + [f"term{i:05d}" for i in range(40)]
+    batch = [
+        (f"b-{i:02d}", " ".join(words[(7 * i + 3 * j) % len(words)] for j in range(1 + i % 11)))
+        for i in range(38)
+    ]
+    return batch + [("b-38", "agent agent plan zzzz"), ("b-39", "nothere9999")]
+
+
 @pytest.fixture(scope="module")
 def index_dir(spark):
     d = tempfile.mkdtemp(prefix="engine-idx-")
@@ -160,6 +172,19 @@ def test_query_engine_warm_matches_wand(spark, idx):
     assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
     assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
     assert serving.search([("none", "zzzz qqqq")], k=5).count() == 0
+    # a 40-query msearch batch (1-11 terms: the >8-term fallback, hot
+    # terms, duplicates, absent terms) matches wand_topk row for row and
+    # comes back ordered by query_id, then rank
+    batch = _msearch_batch()
+    want = key(wand.wand_topk(idx.blocks, idx.termdict, idx.corpus(), batch, k=10, cfg=CFG).collect())
+    rows = serving.search(batch, k=10).collect()
+    assert key(rows) == want
+    assert [(r["query_id"], r["rank"]) for r in rows] == sorted(
+        (r["query_id"], r["rank"]) for r in rows
+    )
+    assert serving.search(batch, k=10).schema.simpleString() == (
+        "struct<query_id:string,rank:int,doc_id:bigint,score:double>"
+    )
     # cap=0 forces the distributed fallback inside serving mode
     serving.driver_eval_max_blocks = 0
     assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
