@@ -820,17 +820,8 @@ def q_explain_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25.topk(bm25.score_candidates(posts_q, ds, qterms, avgdl, CFG), 1)
         .select("query_id", "doc_id")
     )
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     cand = posts_q.join(F.broadcast(qterms), "term").join(ds, "doc_id")
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    contrib = bm25.contrib_col(F.col("w"), F.col("tf"), F.col("doclen"), avgdl, CFG)
     return (
         cand.select("query_id", "doc_id", "term", F.round(contrib, 6).alias("contribution"))
         .join(F.broadcast(top1), ["query_id", "doc_id"])
@@ -1009,17 +1000,8 @@ def q_min_should_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
     qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
     posts_q = posts.filter(F.col("term").isin(qterm_list))
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     cand = posts_q.join(F.broadcast(qterms), "term").join(ds, "doc_id")
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    contrib = bm25.contrib_col(F.col("w"), F.col("tf"), F.col("doclen"), avgdl, CFG)
     scored = (
         cand.select("query_id", "doc_id", "term", contrib.alias("contrib"))
         .groupBy("query_id", "doc_id")
@@ -1406,21 +1388,9 @@ def q_span_near_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["term"]: int(r["df"])
         for r in idx.termdict.filter(F.col("term").isin(span_terms)).collect()
     }
-    k1, b = CFG.bm25.k1, CFG.bm25.b
 
     def _contrib(tf_col: str, w: Column) -> Column:
-        return (
-            w
-            * (F.col(tf_col).cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col(tf_col).cast("double")
-                + F.lit(k1)
-                * (
-                    F.lit(1.0 - b)
-                    + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl)
-                )
-            )
-        )
+        return bm25.contrib_col(w, F.col(tf_col), F.col("doclen"), avgdl, CFG)
 
     idf_map = F.create_map(
         *[x for t in span_terms for x in (F.lit(t), F.lit(bm25.idf(n_docs, dfs.get(t, 0))))]
@@ -3793,18 +3763,9 @@ def q_terms_set_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("ts-1", t, bm25.idf(n_docs, dfs.get(t, 0))) for t in sorted(_TERMS_SET)],
         "query_id string, term string, w double",
     )
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     posts_q = posts.filter(F.col("term").isin(_TERMS_SET))
     cand = posts_q.join(F.broadcast(qterms), "term").join(ds, "doc_id")
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    contrib = bm25.contrib_col(F.col("w"), F.col("tf"), F.col("doclen"), avgdl, CFG)
     required = F.when(
         F.col("doclen") >= _TERMS_SET_LONG_DOCLEN, F.lit(3)
     ).otherwise(F.lit(2))
@@ -4438,21 +4399,12 @@ def q_dis_max_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
     qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
     qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     cand = (
         posts.filter(F.col("term").isin(qterm_list))
         .join(F.broadcast(qterms), "term")
         .join(ds, "doc_id")
     )
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    contrib = bm25.contrib_col(F.col("w"), F.col("tf"), F.col("doclen"), avgdl, CFG)
     scored = (
         cand.select("query_id", "doc_id", contrib.alias("c"))
         .groupBy("query_id", "doc_id")
@@ -4774,21 +4726,9 @@ def q_intervals_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("term").isin(iv_terms)
         )
     )
-    k1, b = CFG.bm25.k1, CFG.bm25.b
 
     def _contrib(tf_col: str, w: Column) -> Column:
-        return (
-            w
-            * (F.col(tf_col).cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col(tf_col).cast("double")
-                + F.lit(k1)
-                * (
-                    F.lit(1.0 - b)
-                    + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl)
-                )
-            )
-        )
+        return bm25.contrib_col(w, F.col(tf_col), F.col("doclen"), avgdl, CFG)
 
     idf_map = F.create_map(
         *[x for t in iv_terms for x in (F.lit(t), F.lit(bm25.idf(n_docs, dfs.get(t, 0))))]
@@ -5483,7 +5423,6 @@ def q_span_first_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs, avgdl = idx.corpus()
     row = idx.termdict.filter(F.col("term") == _SPAN_FIRST_TERM).collect()
     df_t = int(row[0]["df"]) if row else 0
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     # partition-pruned single posting-list scan: only the term's bucket
     # is read (PartitionFilters), then only its list is decoded
     bucket = int(row[0]["term_bucket"]) if row else -1
@@ -5498,12 +5437,8 @@ def q_span_first_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = matched.select(
         "doc_id",
         F.round(
-            F.lit(bm25.idf(n_docs, df_t))
-            * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf").cast("double")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
+            bm25.contrib_col(
+                F.lit(bm25.idf(n_docs, df_t)), F.col("tf"), F.col("doclen"), avgdl, CFG
             ),
             6,
         ).alias("score"),
@@ -5853,16 +5788,11 @@ def q_span_not_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a: ~F.exists("pe", lambda b: (b >= a - d) & (b <= a + d)),
         )
     )
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     scored = cand.select(
         "doc_id",
         F.round(
-            F.lit(bm25.idf(n_docs, df_t))
-            * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf").cast("double")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
+            bm25.contrib_col(
+                F.lit(bm25.idf(n_docs, df_t)), F.col("tf"), F.col("doclen"), avgdl, CFG
             ),
             6,
         ).alias("score"),
@@ -7293,21 +7223,12 @@ def q_simple_query_string_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "query_id string, n_must int",
     )
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     cand = (
         posts.filter(F.col("term").isin(pos_terms))
         .join(F.broadcast(qterms), "term")
         .join(ds, "doc_id")
     )
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    contrib = bm25.contrib_col(F.col("w"), F.col("tf"), F.col("doclen"), avgdl, CFG)
     scored = (
         cand.select("query_id", "doc_id", "term", "kind", contrib.alias("contrib"))
         .groupBy("query_id", "doc_id")
@@ -7470,21 +7391,12 @@ def q_span_or_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = cand.withColumn("_ma", _near("pa")).withColumn("_mb", _near("pb"))
     matched = cand.filter(F.col("_ma") | F.col("_mb"))
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     idfm = F.create_map(
         *[x for t in terms for x in (F.lit(t), F.lit(bm25.idf(n_docs, td.get(t, (0, -1))[0])))]
     )
 
     def _contrib(tf_col: str, w: Column) -> Column:
-        return (
-            w
-            * (F.col(tf_col).cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col(tf_col).cast("double")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-            )
-        )
+        return bm25.contrib_col(w, F.col(tf_col), F.col("doclen"), avgdl, CFG)
 
     score = (
         _contrib("tfc", idfm[F.col("tc")])
@@ -7632,19 +7544,10 @@ def q_span_within_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     matched = cand.filter(enclosed)
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     idfm = F.create_map(
         *[x for t in terms for x in (F.lit(t), F.lit(bm25.idf(n_docs, td.get(t, (0, -1))[0])))]
     )
-    score = (
-        idfm[F.col("tl")]
-        * (F.col("tfl").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tfl").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    score = bm25.contrib_col(idfm[F.col("tl")], F.col("tfl"), F.col("doclen"), avgdl, CFG)
     scored = matched.select("query_id", "doc_id", F.round(score, 6).alias("score"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -8043,21 +7946,12 @@ def q_span_containing_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     matched = cand.filter(contains)
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     idfm = F.create_map(
         *[x for t in terms for x in (F.lit(t), F.lit(bm25.idf(n_docs, td.get(t, (0, -1))[0])))]
     )
 
     def _contrib(tf_col: str, w: Column) -> Column:
-        return (
-            w
-            * (F.col(tf_col).cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col(tf_col).cast("double")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-            )
-        )
+        return bm25.contrib_col(w, F.col(tf_col), F.col("doclen"), avgdl, CFG)
 
     score = _contrib("tf1", idfm[F.col("t1")]) + _contrib("tf2", idfm[F.col("t2")])
     scored = matched.select("query_id", "doc_id", F.round(score, 6).alias("score"))
@@ -8199,16 +8093,8 @@ def q_nested_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
     dfv = {r["term"]: int(r["df"]) for r in ts.filter(F.col("term") == _NESTED_TERM).collect()}
-    k1, b = CFG.bm25.k1, CFG.bm25.b
-    contrib = (
-        F.lit(bm25.idf(n_docs, dfv.get(_NESTED_TERM, 0)))
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-        )
-    )
+    w = F.lit(bm25.idf(n_docs, dfv.get(_NESTED_TERM, 0)))
+    contrib = bm25.contrib_col(w, F.col("tf"), F.col("doclen"), avgdl, CFG)
     hits = (
         posts.filter(F.col("term") == _NESTED_TERM)
         .join(ds, "doc_id")
@@ -8366,21 +8252,12 @@ def q_span_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a: F.exists("plit", lambda q: (q > a) & ((q - a - F.lit(1)) <= slop)),
         )
     )
-    k1, b = CFG.bm25.k1, CFG.bm25.b
     idfm = F.create_map(
         *[x for t in terms for x in (F.lit(t), F.lit(bm25.idf(n_docs, td.get(t, (0, -1))[0])))]
     )
 
     def _contrib(tf_col: str, w: Column) -> Column:
-        return (
-            w
-            * (F.col(tf_col).cast("double") * F.lit(k1 + 1.0))
-            / (
-                F.col(tf_col).cast("double")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen").cast("double") / F.lit(avgdl))
-            )
-        )
+        return bm25.contrib_col(w, F.col(tf_col), F.col("doclen"), avgdl, CFG)
 
     per_term = spanned.select(
         "query_id",

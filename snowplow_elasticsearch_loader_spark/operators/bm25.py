@@ -13,6 +13,11 @@ block-max WAND fast path, and the numpy oracle:
 
 - idf/avgdl are computed ONCE driver-side in float64 and injected as
   literals, so JVM and numpy paths consume bit-identical constants;
+- one contribution formula, ``w * (tf*(k1+1)) / (tf + k1*((1-b) +
+  b*dl/avgdl))``, with one home: ``contrib_col`` (Spark Column) and its
+  numpy twin ``contrib_np``, which share the IEEE expression tree and so
+  agree bit for bit. Every engine path calls one of them; only the
+  DuckDB reference SQL restates it;
 - per-doc accumulation sums contributions in ascending-term order via
   ``F.aggregate`` over a sorted array — bit-exact at any parallelism;
 - ranking quantizes scores to 1e-6 (ties then break on doc_id asc),
@@ -29,7 +34,7 @@ from __future__ import annotations
 import math
 from typing import Iterable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -69,6 +74,31 @@ def quantize_doclen_np(dl):
     _, exp = np.frexp(dli)
     s = np.maximum(exp - 4, 0)
     return ((dli >> s) << s).astype(np.float64)
+
+
+def doclen_np(dl, quantize: bool):
+    """float64 doclens as every numpy scorer uses them: quantized when
+    ``quantize`` (the config's ``bm25.quantize_doclen``) is set."""
+    return quantize_doclen_np(dl) if quantize else dl.astype("float64")
+
+
+def contrib_col(w: Column, tf: Column, dl: Column, avgdl: float, cfg: EngineConfig) -> Column:
+    """One posting's BM25 contribution as a Spark Column: query weight
+    ``w`` (qtf * idf), term frequency ``tf`` and doclen ``dl`` (already
+    quantized if the config asks for it). The twin of ``contrib_np``."""
+    k1, b = cfg.bm25.k1, cfg.bm25.b
+    tf = tf.cast("double")
+    return (
+        w
+        * (tf * F.lit(k1 + 1.0))
+        / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / F.lit(avgdl)))
+    )
+
+
+def contrib_np(w, tf, dl, avgdl: float, k1: float, b: float):
+    """numpy twin of ``contrib_col`` on float64 arrays (or scalars),
+    with the same expression tree, so both give the same bits."""
+    return w * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
 
 
 def analyze_queries(queries: Iterable[tuple[str, str]]) -> list[tuple[str, str, int]]:
@@ -120,22 +150,16 @@ def score_candidates(
     cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """(query_id, doc_id, score) with order-fixed float64 accumulation."""
-    k1, b = cfg.bm25.k1, cfg.bm25.b
     cand = postings.join(F.broadcast(qterms), "term").join(docstats, "doc_id")
+    return _sum_in_term_order(cand, avgdl, cfg)
+
+
+def _sum_in_term_order(cand: DataFrame, avgdl: float, cfg: EngineConfig) -> DataFrame:
+    """(query_id, doc_id, score) from (query_id, doc_id, term, w, tf,
+    doclen) candidate rows: contributions sorted by term, folded left."""
     dl = quantize_doclen_col("doclen") if cfg.bm25.quantize_doclen else F.col("doclen")
-    # contribution, computed with the exact expression-tree the WAND
-    # UDF uses (w * (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl)))
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / F.lit(avgdl))
-        )
-    )
+    contrib = contrib_col(F.col("w"), F.col("tf"), dl, avgdl, cfg)
     scored = cand.select("query_id", "doc_id", F.col("term"), contrib.alias("contrib"))
-    # fixed accumulation order: sort contributions by term, fold left
     return (
         scored.groupBy("query_id", "doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("cs"))
@@ -213,8 +237,8 @@ def bm25_topk_fused(
       (array_intersect + per-term count over the token array), so the
       postings groupBy shuffle AND the docstats join disappear — doclen
       rides along on the same row. tf values are identical to the
-      groupBy count by construction, and the contribution expression +
-      ordered accumulation are shared with score_candidates.
+      groupBy count by construction, and the contribution + ordered
+      accumulation are score_candidates' own (``_sum_in_term_order``).
 
     The idf/avgdl literals, the contribution expression tree, and the
     sorted-fold accumulation are byte-identical to the naive path, so
@@ -261,27 +285,4 @@ def bm25_topk_fused(
         .select("doc_id", "doclen", F.col("e.term").alias("term"), F.col("e.tf").alias("tf"))
         .join(F.broadcast(qterms), "term")
     )
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    dl = quantize_doclen_col("doclen") if cfg.bm25.quantize_doclen else F.col("doclen")
-    contrib = (
-        F.col("w")
-        * (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf").cast("double")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / F.lit(avgdl))
-        )
-    )
-    scored = (
-        cand.select("query_id", "doc_id", F.col("term"), contrib.alias("contrib"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("cs"))
-        .select(
-            "query_id",
-            "doc_id",
-            F.aggregate("cs", F.lit(0.0), lambda acc, x: acc + x["contrib"]).alias(
-                "score"
-            ),
-        )
-    )
-    return topk(scored, k)
+    return topk(_sum_in_term_order(cand, avgdl, cfg), k)

@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
 from ..functions.analyze import tokens_col
+from .bm25 import contrib_np
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -220,11 +221,9 @@ def _emit_blocks(
     tf_off = np.concatenate(([0], np.cumsum(tf_lens)))
     dl_off = np.concatenate(([0], np.cumsum(dl_lens)))
 
-    # per-block max partial score (tf*(k1+1))/(tf + k1*(1-b+b*dl/avgdl))
-    tfd = tf.astype(np.float64)
-    partial = (tfd * (k1 + 1.0)) / (
-        tfd + k1 * ((1.0 - b) + b * dl.astype(np.float64) / avgdl)
-    )
+    # per-block max partial score: the contribution at weight 1.0
+    # (1.0 * x / y is bit-equal to x / y)
+    partial = contrib_np(1.0, tf.astype(np.float64), dl.astype(np.float64), avgdl, k1, b)
     max_partial = np.maximum.reduceat(partial, bstart)
     max_tf_b = np.maximum.reduceat(tf, bstart).astype(np.int64)
     min_dl_b = np.minimum.reduceat(dl, bstart).astype(np.int64)

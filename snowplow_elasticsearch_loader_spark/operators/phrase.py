@@ -4,7 +4,7 @@ query surface seeded at it/TestHelpers.scala:157-201).
 Replaces r01's full-corpus normalize+contains() scan: candidate blocks
 are read through the same pruned path as BM25 (term_bucket partition
 pruning + term predicate pushdown), and adjacency is decided from the
-positions stream inside a per-(query, doc-range) Arrow group.
+positions stream inside a per-doc-range Arrow group.
 
 Adjacency algorithm (vectorized slot intersection): a phrase of m
 tokens defines m slots; slot i holding term t contributes, for every
@@ -15,7 +15,8 @@ exactly "count of (d, base) across slots == m" — one np.unique with
 counts, no per-row Python.
 
 Matched docs are then scored with the same BM25 contract as every
-other path (same idf literals, ascending-term accumulation, round-6
+other path (same idf literals, ``bm25.contrib_np`` on the same
+optionally quantized doclen, ascending-term accumulation, round-6
 quantized ranking), so the DuckDB phrase oracle (normalized-text
 containment + BM25 over phrase terms) stays the oracle unchanged.
 """
@@ -25,16 +26,20 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
 from ..functions.analyze import tokenize_text
-from .bm25 import idf as idf_fn
+from .bm25 import contrib_np, doclen_np, idf as idf_fn
 from .index_build import decode_positions
-from .wand import RESULT_SCHEMA, _exact_scores, _empty_result
+from .wand import (
+    _lookup_terms,
+    _per_range_topk,
+    _range_topk,
+    _result_frame,
+    _score_docs,
+    empty_search_result,
+)
 
 #: positions fit 20 bits (limits.max_tokens_per_turn <= 100k < 2^17);
 #: doc ids fit the remaining 43 bits at 10^12-turn scale
@@ -50,115 +55,86 @@ PHRASE_INPUT_COLS = [
 ]
 
 
-def make_phrase_evaluator(k: int, k1: float, b: float, avgdl: float, m_by_query: dict):
-    def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        query_id = key[0]
-        m = int(m_by_query[query_id])
-        if len(pdf) == 0:
-            return _empty_result()
-        terms, t_codes = np.unique(pdf["term"].to_numpy(), return_inverse=True)
-        w_by_code = np.zeros(terms.size)
-        w_by_code[t_codes] = pdf["w"].to_numpy()
-
-        # decode every candidate block once
-        blk = []
-        slot_keys = []
-        for i in range(len(pdf)):
-            d, tf, dl = codec.decode_block(
-                bytes(pdf["docs_varint"].iat[i]),
-                bytes(pdf["tfs_varint"].iat[i]),
-                bytes(pdf["dls_varint"].iat[i]),
-            )
-            pb = pdf["pos_varint"].iat[i]
-            if pb is None or len(pb) == 0:
-                raise ValueError(
-                    "phrase search requires a positional index "
-                    "(index.store_positions was off at build time)"
-                )
-            plists = decode_positions(bytes(pb), tf)
-            blk.append((t_codes[i], d, tf, dl))
-            doc_of_pos = np.repeat(d.astype(np.int64), tf.astype(np.int64))
-            p = np.concatenate(plists) if plists else np.empty(0, dtype=np.int64)
-            for off in pdf["offsets"].iat[i]:
-                ok = p >= off
-                slot_keys.append(
-                    ((doc_of_pos[ok] << _POS_BITS) | (p[ok] - off)).astype(np.int64)
-                )
-        if not slot_keys:
-            return _empty_result()
-        all_keys = np.concatenate(slot_keys)
-        uniq, counts = np.unique(all_keys, return_counts=True)
-        matched = np.unique(uniq[counts == m] >> _POS_BITS)
-        if matched.size == 0:
-            return _empty_result()
-
-        # exact BM25 over the phrase's terms, matched docs only —
-        # identical expression tree + accumulation order as bm25/wand
-        rows_d, rows_c, rows_t = [], [], []
-        for code, d, tf, dl in blk:
-            mask = np.isin(d.astype(np.int64), matched)
-            if not mask.any():
-                continue
-            tff = tf.astype(np.float64)[mask]
-            dlf = dl.astype(np.float64)[mask]
-            contrib = (
-                w_by_code[code]
-                * (tff * (k1 + 1.0))
-                / (tff + k1 * ((1.0 - b) + b * dlf / avgdl))
-            )
-            rows_d.append(d.astype(np.int64)[mask])
-            rows_c.append(contrib)
-            rows_t.append(np.full(int(mask.sum()), code, dtype=np.int32))
-        if not rows_d:
-            return _empty_result()
-        s_doc, s_score = _exact_scores(
-            np.concatenate(rows_d), np.concatenate(rows_t), np.concatenate(rows_c)
-        )
-        if s_doc.size > k:
-            key_score = np.round(s_score, 6)
-            order = np.lexsort((s_doc, -key_score))[:k]
-            s_doc, s_score = s_doc[order], s_score[order]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(query_id, s_doc.size),
-                "doc_id": s_doc.astype(np.int64),
-                "score": s_score,
-            }
-        )
-
-    return evaluate
-
-
-def make_phrase_range_evaluator(
+def make_phrase_evaluator(
     queries_spec: dict[str, dict],
     k: int,
     k1: float,
     b: float,
     avgdl: float,
+    quantize: bool = False,
 ):
-    """Per-RANGE phrase evaluator: query weights/offsets are driver-known
-    and ride the closure (``queries_spec[qid] = {"m": ..., "terms":
-    {term: (w, offsets)}}``), so block rows cross the Arrow boundary
-    once per range with no qterms broadcast join and no per-query row
-    duplication — the same r6 restructure as the WAND path. Scores come
-    from the unchanged per-query evaluator, so they stay bit-identical."""
+    """Per-RANGE phrase evaluator for every query of the call. Query
+    weights and slot offsets are driver-known and ride the closure
+    (``queries_spec[qid] = {"m": n_tokens, "terms": {term: (w,
+    offsets)}}``), so a range's block rows cross the Arrow boundary once
+    for all queries, with no qterms join, and each block is decoded at
+    most once per range."""
 
     def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
+        term = pdf["term"]
+        _, codes = np.unique(term.to_numpy(), return_inverse=True)
+        decoded: dict[int, tuple] = {}
+
+        def block(i: int) -> tuple:
+            """(doc int64, tf float64, dl float64, positions, doc per position)"""
+            if i not in decoded:
+                d, tf, dl = codec.decode_block(
+                    bytes(pdf["docs_varint"].iat[i]),
+                    bytes(pdf["tfs_varint"].iat[i]),
+                    bytes(pdf["dls_varint"].iat[i]),
+                )
+                pb = pdf["pos_varint"].iat[i]
+                if pb is None or len(pb) == 0:
+                    raise ValueError(
+                        "phrase search requires a positional index "
+                        "(index.store_positions was off at build time)"
+                    )
+                plists = decode_positions(bytes(pb), tf)
+                d = d.astype(np.int64)
+                decoded[i] = (
+                    d,
+                    tf.astype(np.float64),
+                    doclen_np(dl, quantize),
+                    np.concatenate(plists) if plists else np.empty(0, dtype=np.int64),
+                    np.repeat(d, tf.astype(np.int64)),
+                )
+            return decoded[i]
+
+        qids, out_d, out_s = [], [], []
         for qid in sorted(queries_spec):
-            spec = queries_spec[qid]
-            terms_q = spec["terms"]
-            sub = pdf[pdf["term"].isin(terms_q)]
-            if len(sub) == 0:
+            terms_q = queries_spec[qid]["terms"]
+            rows = np.flatnonzero(term.isin(terms_q).to_numpy())
+            slot_keys = []
+            for i in rows:
+                _, _, _, p, doc_of_pos = block(i)
+                for off in terms_q[term.iat[i]][1]:
+                    ok = p >= off
+                    slot_keys.append(
+                        ((doc_of_pos[ok] << _POS_BITS) | (p[ok] - off)).astype(np.int64)
+                    )
+            if not slot_keys:
                 continue
-            sub = sub.copy()
-            sub["w"] = sub["term"].map({t: wo[0] for t, wo in terms_q.items()})
-            sub["offsets"] = sub["term"].map({t: wo[1] for t, wo in terms_q.items()})
-            inner = make_phrase_evaluator(k, k1, b, avgdl, {qid: spec["m"]})
-            frames.append(inner((qid,), sub))
-        if not frames:
-            return _empty_result()
-        return pd.concat(frames, ignore_index=True)
+            uniq, counts = np.unique(np.concatenate(slot_keys), return_counts=True)
+            matched = np.unique(uniq[counts == queries_spec[qid]["m"]] >> _POS_BITS)
+            if matched.size == 0:
+                continue
+            # exact BM25 over the phrase's terms, matched docs only —
+            # the same contribution and accumulation order as wand
+            w = [terms_q[t][0] for t in term.iloc[rows]]
+            d, s = _range_topk(
+                *_score_docs(
+                    codes[rows],
+                    [block(i)[0] for i in rows],
+                    lambda j: contrib_np(w[j], *block(rows[j])[1:3], avgdl, k1, b),
+                    matched,
+                ),
+                k,
+            )
+            if d.size:
+                qids.append(qid)
+                out_d.append(d)
+                out_s.append(s)
+        return _result_frame(qids, out_d, out_s)
 
     return evaluate
 
@@ -178,68 +154,26 @@ def phrase_topk(
     ``term_rows`` — pre-looked-up ``{term, df, term_bucket}`` dicts
     (``InvertedIndex.lookup_terms``): skips the per-call termdict
     filter+collect Spark job."""
-    from ..shipping import ensure_shipped
-
-    spark = blocks.sparkSession
-    ensure_shipped(spark)
     n_docs, avgdl = corpus
     analyzed = {qid: tokenize_text(qtext) for qid, qtext in queries}
-    all_terms = sorted({t for toks in analyzed.values() for t in toks})
-    td = (
-        term_rows
-        if term_rows is not None
-        else [
-            r.asDict()
-            for r in termdict.filter(F.col("term").isin(all_terms))
-            .select("term", "df", "term_bucket")
-            .collect()
-        ]
-    )
+    td = _lookup_terms(termdict, sorted({t for toks in analyzed.values() for t in toks}), term_rows)
     df_map = {r["term"]: int(r["df"]) for r in td}
-    bucket_map = {r["term"]: int(r["term_bucket"]) for r in td}
-
-    qrows = []  # (query_id, term, w, offsets)
-    m_by_query: dict[str, int] = {}
+    queries_spec: dict[str, dict] = {}
     live_terms: set[str] = set()
     for qid, toks in analyzed.items():
         if not toks or any(t not in df_map for t in toks):
             continue  # a missing term can never match the full phrase
-        m_by_query[qid] = len(toks)
         offs: dict[str, list[int]] = {}
         for i, t in enumerate(toks):
             offs.setdefault(t, []).append(i)
-        for t, o in sorted(offs.items()):
-            w = float(len(o)) * idf_fn(n_docs, df_map[t])
-            qrows.append((qid, t, w, o))
-            live_terms.add(t)
-    empty = spark.createDataFrame([], schema=RESULT_SCHEMA).select(
-        "query_id", F.lit(1).alias("rank"), "doc_id", "score"
-    ).limit(0)
-    if not qrows:
-        return empty
-    queries_spec: dict[str, dict] = {}
-    for qid, t, w, offs in qrows:
-        queries_spec.setdefault(qid, {"m": m_by_query[qid], "terms": {}})[
-            "terms"
-        ][t] = (w, offs)
-    buckets = sorted({bucket_map[t] for t in live_terms})
-    cand = (
-        blocks.filter(F.col("term_bucket").isin(buckets))  # partition pruning
-        .filter(F.col("term").isin(sorted(live_terms)))  # pushdown
-        .select(*PHRASE_INPUT_COLS)
+        queries_spec[qid] = {
+            "m": len(toks),
+            "terms": {t: (float(len(o)) * idf_fn(n_docs, df_map[t]), o) for t, o in offs.items()},
+        }
+        live_terms.update(offs)
+    if not queries_spec:
+        return empty_search_result(blocks.sparkSession)
+    evaluator = make_phrase_evaluator(
+        queries_spec, k, cfg.bm25.k1, cfg.bm25.b, avgdl, quantize=cfg.bm25.quantize_doclen
     )
-    per_range = cand.groupBy("range_id").applyInPandas(
-        make_phrase_range_evaluator(
-            queries_spec, k, cfg.bm25.k1, cfg.bm25.b, avgdl
-        ),
-        schema=RESULT_SCHEMA,
-    )
-    ranked = per_range.select(
-        "query_id", "doc_id", F.round(F.col("score"), 6).alias("score")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k).select("query_id", "rank", "doc_id", "score")
+    return _per_range_topk(blocks, td, sorted(live_terms), PHRASE_INPUT_COLS, evaluator, k)

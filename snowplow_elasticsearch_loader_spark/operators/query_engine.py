@@ -11,11 +11,14 @@ queries:
   ``warm=False`` keeps the per-query filtered lookup job;
 - the blocks scan stays lazy/pruned per query (partition + predicate
   pushdown), so only ONE Spark job runs per query;
-- many queries in one call share everything (the batch path the bench
-  reports separately);
+- many queries in one call share everything: outside serving mode a
+  call is one ``wand.wand_topk`` over the engine's term lookups;
 - in serving mode (``cache_blocks=True``) a point query whose postings
   fit the driver is scored in-process by a dense per-doc accumulator
   and returned as one Arrow table (``_search_driver``).
+
+Both paths score with ``bm25.contrib_np``, the single home of the BM25
+contribution formula (its Spark twin is ``bm25.contrib_col``).
 """
 
 from __future__ import annotations
@@ -26,23 +29,19 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..index_store import InvertedIndex
-from .bm25 import analyze_queries, idf as idf_fn
-from .wand import RESULT_SCHEMA, WAND_INPUT_COLS, _exact_scores, make_wand_evaluator
+from .bm25 import analyze_queries, contrib_np, idf as idf_fn
+from .wand import SEARCH_SCHEMA, _exact_scores, empty_search_result, wand_topk
 
-#: (query_id, rank, doc_id, score) — the schema every search path returns
-SEARCH_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.StringType()),
-        T.StructField("rank", T.IntegerType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
+#: most candidate blocks a call may gather to be scored in the driver
+#: (serving mode); larger calls run the distributed ``wand_topk``
+DRIVER_EVAL_MAX_BLOCKS = 50_000
+#: budget of the per-term decoded-postings cache
+BLOCK_CACHE_MAX_BYTES = 256 << 20
+#: largest term dictionary a warm engine collects into the driver
+WARM_MAX_TERMS = 5_000_000
 
 #: most addends per doc for which ``np.add.reduceat`` (and so
 #: ``_exact_scores``) sums sequentially; past it numpy sums pairwise
@@ -136,22 +135,18 @@ class QueryEngine:
         self._serving = cache_blocks
         # coordinator-eval cap: a point query whose candidate posting
         # blocks fit comfortably in the driver is answered by gathering
-        # them (one pruned scan job) and running the SAME numpy WAND
-        # evaluator in-process — no shuffle, no python-worker round
-        # trip, no window stage. This is the search-engine coordinator
-        # pattern (shards return postings, coordinator merges); bigger
-        # queries fall back to the distributed per-range path.
-        self.driver_eval_max_blocks = int(
-            os.environ.get("SPARK_GRAFT_DRIVER_EVAL_MAX_BLOCKS", "50000")
-        )
+        # them (one pruned scan job) and scoring them in-process with
+        # wand's contribution and accumulation order — no shuffle, no
+        # python-worker round trip, no window stage. This is the
+        # search-engine coordinator pattern (shards return postings,
+        # coordinator merges); bigger queries run ``wand_topk``.
+        self.driver_eval_max_blocks = DRIVER_EVAL_MAX_BLOCKS
         # per-term DECODED-postings cache (the ES node-query-cache
         # analog): repeated hot terms skip the scan job entirely.
         # LRU-evicted at ~256 MB of decoded posting arrays.
         self._block_cache: dict[str, object] = {}
         self._block_cache_bytes = 0
-        self.block_cache_max_bytes = int(
-            os.environ.get("SPARK_GRAFT_DRIVER_BLOCK_CACHE_MB", "256")
-        ) * (1 << 20)
+        self.block_cache_max_bytes = BLOCK_CACHE_MAX_BYTES
         #: per-bucket physical file listing for the local pyarrow gather
         #: (point-query latency path); None until first use per bucket
         self._bucket_files_cache: dict[int, list[str]] = {}
@@ -165,9 +160,7 @@ class QueryEngine:
         # cap the engine silently stays in filtered-lookup mode (the
         # scale-safe path), instead of OOMing the driver on a web-scale
         # vocabulary.
-        self.warm_max_terms = int(
-            os.environ.get("SPARK_GRAFT_WARM_MAX_TERMS", str(5_000_000))
-        )
+        self.warm_max_terms = WARM_MAX_TERMS
         if warm and self._termdict_rows_within(self.warm_max_terms):
             rows = idx.termdict.select("term", "df", "term_bucket", "block_count").collect()
             self._term_cache = {
@@ -217,79 +210,30 @@ class QueryEngine:
         }
 
     def search(self, queries: list[tuple[str, str]], k: int = 10) -> DataFrame:
-        """(query_id, rank, doc_id, score) — block-max WAND, one Spark
-        job per call regardless of query count.
+        """(query_id, rank, doc_id, score) — block-max WAND, at most one
+        Spark job per call regardless of query count.
 
-        Query weights are inlined as a LITERAL term -> entries map
-        rather than a broadcast-joined table: weights are driver-known
-        (warm term cache), so a point query pays no createDataFrame
-        round-trip and no broadcast-exchange stage — the latency path.
-        The batch path (wand.wand_topk) keeps the broadcast join, which
-        is the right shape when the query SET itself is large."""
+        In serving mode a call whose candidate blocks number at most
+        ``driver_eval_max_blocks`` is scored in the driver
+        (``_search_driver``). Every other call is one ``wand_topk`` over
+        the engine's own term lookups, so it runs no term-dictionary
+        job: query weights ride the per-range evaluator's closure, with
+        no qterms join and no broadcast exchange."""
         qrows = analyze_queries(queries)
         terms = sorted({t for _, t, _ in qrows})
         tmap = self._lookup(terms)
         total_blocks = sum(tmap[t][2] for t in terms if t in tmap)
-        if (
-            self._serving
-            and any(t in tmap for t in terms)
-            and total_blocks <= self.driver_eval_max_blocks
-        ):
+        if self._serving and tmap and total_blocks <= self.driver_eval_max_blocks:
             return self._search_driver(qrows, tmap, k)
-        qterm_rows = [
-            (qid, t, float(qtf) * idf_fn(self.n_docs, tmap[t][0]))
-            for qid, t, qtf in qrows
-            if t in tmap
-        ]
-        buckets = sorted({tmap[t][1] for _, t, _ in qrows if t in tmap})
-        if not qterm_rows:
-            return self._empty_result()
-        by_term: dict[str, list[tuple[str, float]]] = {}
-        for qid, t, w in qterm_rows:
-            by_term.setdefault(t, []).append((qid, w))
-        map_args = []
-        for t, entries in sorted(by_term.items()):
-            map_args.append(F.lit(t))
-            map_args.append(
-                F.array(
-                    *[
-                        F.struct(F.lit(qid).alias("query_id"), F.lit(w).alias("w"))
-                        for qid, w in entries
-                    ]
-                )
-            )
-        qmap = F.create_map(*map_args)
-        cand = (
-            self.blocks.filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(sorted(by_term)))
-            .select(*WAND_INPUT_COLS)
-            .withColumn("_q", F.explode(qmap[F.col("term")]))
-            .select(
-                *WAND_INPUT_COLS,
-                F.col("_q.query_id").alias("query_id"),
-                F.col("_q.w").alias("w"),
-            )
+        return wand_topk(
+            self.blocks, self.idx.termdict, (self.n_docs, self.avgdl), queries,
+            k, self.cfg, term_rows=self._term_rows(tmap),
         )
-        per_range = cand.groupBy("query_id", "range_id").applyInPandas(
-            make_wand_evaluator(
-                k, self.cfg.bm25.k1, self.cfg.bm25.b, self.avgdl,
-                quantize=self.cfg.bm25.quantize_doclen,
-            ),
-            schema=RESULT_SCHEMA,
-        )
-        scored = per_range.select(
-            "query_id", "doc_id", F.round(F.col("score"), 6).alias("score")
-        )
-        ranked = scored.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-            ),
-        )
-        return ranked.filter(F.col("rank") <= k).select("query_id", "rank", "doc_id", "score")
 
-    def _empty_result(self) -> DataFrame:
-        return self.idx.spark.createDataFrame([], schema=SEARCH_SCHEMA)
+    @staticmethod
+    def _term_rows(tmap: dict[str, tuple[int, int, int]]) -> list[dict]:
+        """``wand_topk``/``phrase_topk`` term rows from ``_lookup``'s map."""
+        return [{"term": t, "df": v[0], "term_bucket": v[1]} for t, v in tmap.items()]
 
     def _search_driver(self, qrows, tmap, k: int) -> DataFrame:
         """Coordinator fast path: gather the queries' candidate blocks
@@ -376,7 +320,7 @@ class QueryEngine:
             scores.append(s)
         counts = np.array([d.size for d in docs], dtype=np.int64)
         if not counts.sum():
-            return self._empty_result()
+            return empty_search_result(self.idx.spark)
         # rank = 1..n within each query's run of rows
         starts = np.repeat(np.cumsum(counts) - counts, counts)
         table = pa.table(
@@ -460,7 +404,7 @@ class QueryEngine:
         import numpy as np
 
         from ..functions import codec
-        from .bm25 import quantize_doclen_np
+        from .bm25 import doclen_np
 
         cnt = sub["doc_count"].to_numpy(np.int64)
         if cnt.size == 0:
@@ -475,12 +419,8 @@ class QueryEngine:
         tf = codec.varint_decode(
             b"".join(bytes(x) for x in sub["tfs_varint"])
         ).astype(np.float64)
-        dl = codec.varint_decode(
-            b"".join(bytes(x) for x in sub["dls_varint"])
-        ).astype(np.float64)
-        if self.cfg.bm25.quantize_doclen:
-            dl = quantize_doclen_np(dl)
-        return doc, tf, dl
+        dl = codec.varint_decode(b"".join(bytes(x) for x in sub["dls_varint"]))
+        return doc, tf, doclen_np(dl, self.cfg.bm25.quantize_doclen)
 
     def _exact_topk_decoded(self, qid: str, decs: list[tuple], ws: list[float], k: int):
         """Ranked top-k (doc int64, score rounded to 6 places) of one
@@ -490,10 +430,7 @@ class QueryEngine:
         the sort. ``qid`` is not read; it stays in the signature for
         callers and wrappers that pass it positionally."""
         k1, b = self.cfg.bm25.k1, self.cfg.bm25.b
-        contribs = [
-            w * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / self.avgdl))
-            for (_, tf, dl), w in zip(decs, ws)
-        ]
+        contribs = [contrib_np(w, tf, dl, self.avgdl, k1, b) for (_, tf, dl), w in zip(decs, ws)]
         if len(decs) <= SEQUENTIAL_SUM_MAX_ADDENDS:
             d, s = self._acc.sum([dec[0] for dec in decs], contribs)
         else:
@@ -516,11 +453,7 @@ class QueryEngine:
         from .phrase import phrase_topk
 
         terms = sorted({t for _, q in queries for t in tokenize_text(q)})
-        tmap = self._lookup(terms)
-        term_rows = [
-            {"term": t, "df": v[0], "term_bucket": v[1]} for t, v in tmap.items()
-        ]
         return phrase_topk(
             self.blocks, self.idx.termdict, (self.n_docs, self.avgdl), queries,
-            k, self.cfg, term_rows=term_rows,
+            k, self.cfg, term_rows=self._term_rows(self._lookup(terms)),
         )

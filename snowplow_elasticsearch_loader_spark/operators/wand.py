@@ -10,10 +10,11 @@ surface, ES ``_search`` — it/TestHelpers.scala:157-201):
    naive relational path;
 3. scan only the candidate blocks: ``term_bucket`` partition pruning +
    ``term`` predicate pushdown into the parquet/Iceberg scan;
-4. per (query, doc-range) group, a two-phase block-max evaluation
-   inside one Arrow UDF (per-range = per-segment, so a hot query term
-   never concentrates one giant group);
-5. global top-k merge (one small shuffle over per-range candidates).
+4. per doc-range group, a two-phase block-max evaluation of every
+   query of the call inside one Arrow UDF (per-range = per-segment, so
+   a hot query term never concentrates one giant group);
+5. global top-k merge (``bm25.topk``: one small shuffle over per-range
+   candidates).
 
 The pruning phase is the block-max idea vectorized for numpy instead
 of the classic pointer-walking WAND loop (which would be per-row
@@ -27,10 +28,12 @@ that can still make top-k. Safety argument: a doc with
 ``ub < t`` satisfies ``score <= ub < t <= kth_best``, so exclusion can
 never change the top-k set or its ranking.
 
-Scores share idf doubles and the IEEE expression tree of each
-contribution with the naive relational path, and every numpy scorer
-here (this evaluator, ``phrase.py``, the ``QueryEngine`` coordinator
-path) sums a doc's contributions in ascending term order in the order
+Every contribution here, block upper bounds included, is
+``bm25.contrib_np``, the numpy twin of the naive path's
+``bm25.contrib_col``: the one home of the BM25 formula, so both paths
+share idf doubles and the IEEE expression tree. Every numpy scorer
+(this evaluator, ``phrase.py``, the ``QueryEngine`` coordinator path)
+sums a doc's contributions in ascending term order in the order
 ``_exact_scores`` pins. That order is not the naive path's: its
 ``F.aggregate`` folds left from 0.0 over the term-sorted contributions,
 while numpy adds the first contribution to a sequential sum of the
@@ -46,11 +49,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
-from .bm25 import analyze_queries, idf as idf_fn
+from .bm25 import analyze_queries, contrib_np, doclen_np, idf as idf_fn, topk
 
 #: block columns the BM25 evaluator needs (column pruning contract —
 #: positional payloads and block metadata never cross the Arrow boundary)
@@ -72,15 +74,20 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
+#: (query_id, rank, doc_id, score) — the schema every search path returns
+SEARCH_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.StringType()),
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
 
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series(dtype=object),
-            "doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float64"),
-        }
-    )
+
+def empty_search_result(spark) -> DataFrame:
+    """The answer of a search none of whose query terms is indexed."""
+    return spark.createDataFrame([], schema=SEARCH_SCHEMA)
 
 
 def _exact_scores(
@@ -101,132 +108,46 @@ def _exact_scores(
     return d[starts], np.add.reduceat(c, starts)
 
 
-def make_wand_evaluator(k: int, k1: float, b: float, avgdl: float, quantize: bool = False):
-    from .bm25 import quantize_doclen_np
-
-    def _dl(v: np.ndarray) -> np.ndarray:
-        return quantize_doclen_np(v) if quantize else v.astype(np.float64)
-
-    def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        query_id = key[0]
-        if len(pdf) == 0:
-            return _empty_result()
-        terms, t_codes = np.unique(pdf["term"].to_numpy(), return_inverse=True)
-        w_by_code = np.zeros(terms.size)
-        w_by_code[t_codes] = pdf["w"].to_numpy()
-
-        # ---- phase 1: doc-id-only decode + per-doc upper bounds ----
-        # Upper bound per block from avgdl-INDEPENDENT stats: the partial
-        # score (tf*(k1+1))/(tf + k1*((1-b)+b*dl/avgdl)) is increasing in
-        # tf and decreasing in dl, so partial(max_tf, min_dl) bounds every
-        # posting in the block under the CURRENT avgdl — safe even when
-        # blocks were built while the corpus (and its avgdl) was growing
-        # (streamed micro-batches). Exactly one (k1+1) factor.
-        mtf = pdf["max_tf"].to_numpy(np.float64)
-        # quantization is monotone, so q(min_dl) still lower-bounds
-        # every quantized doclen in the block: the bound stays valid
-        mdl = _dl(pdf["min_dl"].to_numpy())
-        ubs = pdf["w"].to_numpy() * (mtf * (k1 + 1.0)) / (
-            mtf + k1 * ((1.0 - b) + b * mdl / avgdl)
-        )
-        blk_docs: list[np.ndarray] = []
-        blk_code: list[np.ndarray] = []
-        blk_ub: list[np.ndarray] = []
-        for i in range(len(pdf)):
-            d = codec.delta_decode(codec.varint_decode(bytes(pdf["docs_varint"].iat[i])))
-            blk_docs.append(d)
-            blk_code.append(np.full(d.size, t_codes[i], dtype=np.int32))
-            blk_ub.append(np.full(d.size, ubs[i]))
-        doc = np.concatenate(blk_docs)
-        code = np.concatenate(blk_code)
-        ub = np.concatenate(blk_ub)
-        u_doc, doc_ub = _exact_scores(doc, code, ub)  # reuse: segment-sum of ubs
-
-        if u_doc.size > 4 * k:
-            # threshold from the 4k highest-bound docs, exactly scored
-            top_idx = np.argpartition(doc_ub, -4 * k)[-4 * k :]
-            survivors_seed = u_doc[top_idx]
-            t = _threshold(
-                pdf, blk_docs, t_codes, w_by_code, survivors_seed, k, k1, b, avgdl, _dl
-            )
-            # 1e-6 margin: an excluded doc may not round-tie the kth
-            # rounded score under the quantized ranking contract
-            keep_docs = u_doc[doc_ub >= t - 1e-6] if t > 0.0 else u_doc
-        else:
-            keep_docs = u_doc
-
-        # ---- phase 2: full decode + exact scores for surviving docs ----
-        keep_set = keep_docs
-        rows_d: list[np.ndarray] = []
-        rows_c: list[np.ndarray] = []
-        rows_t: list[np.ndarray] = []
-        for i in range(len(pdf)):
-            d = blk_docs[i]
-            # block-level skip: no surviving doc inside -> never decode tf/dl
-            mask = np.isin(d, keep_set, assume_unique=False)
-            if not mask.any():
-                continue
-            tf = codec.varint_decode(bytes(pdf["tfs_varint"].iat[i])).astype(np.float64)
-            dl = _dl(codec.varint_decode(bytes(pdf["dls_varint"].iat[i])))
-            contrib = (
-                w_by_code[t_codes[i]]
-                * (tf * (k1 + 1.0))
-                / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-            )
-            rows_d.append(d[mask])
-            rows_c.append(contrib[mask])
-            rows_t.append(np.full(int(mask.sum()), t_codes[i], dtype=np.int32))
-        if not rows_d:
-            return _empty_result()
-        s_doc, s_score = _exact_scores(
-            np.concatenate(rows_d), np.concatenate(rows_t), np.concatenate(rows_c)
-        )
-        if s_doc.size > k:
-            # per-range top-k candidates (quantized contract order)
-            key_score = np.round(s_score, 6)
-            order = np.lexsort((s_doc, -key_score))[:k]
-            s_doc, s_score = s_doc[order], s_score[order]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(query_id, s_doc.size),
-                "doc_id": s_doc.astype(np.int64),
-                "score": s_score,
-            }
-        )
-
-    return evaluate
-
-
-def _threshold(pdf, blk_docs, t_codes, w_by_code, seed_docs, k, k1, b, avgdl, _dl) -> float:
-    """Exactly score the seed docs; return their kth-best score (a lower
-    bound on the final kth-best)."""
+def _score_docs(codes, docs: list, contrib, targets: np.ndarray):
+    """Exact (doc, score) of the ``targets`` docs over one query's
+    blocks: block ``j`` holds term code ``codes[j]`` and doc ids
+    ``docs[j]``, and ``contrib(j)`` gives its per-posting contributions.
+    ``contrib`` runs only for blocks that hold a target, so a block with
+    none never decodes its payload."""
     rows_d, rows_c, rows_t = [], [], []
-    for i in range(len(pdf)):
-        d = blk_docs[i]
-        mask = np.isin(d, seed_docs)
-        if not mask.any():
-            continue
-        tf = codec.varint_decode(bytes(pdf["tfs_varint"].iat[i])).astype(np.float64)
-        dl = _dl(codec.varint_decode(bytes(pdf["dls_varint"].iat[i])))
-        contrib = (
-            w_by_code[t_codes[i]]
-            * (tf * (k1 + 1.0))
-            / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-        )
-        rows_d.append(d[mask])
-        rows_c.append(contrib[mask])
-        rows_t.append(np.full(int(mask.sum()), t_codes[i], dtype=np.int32))
+    for j, d in enumerate(docs):
+        mask = np.isin(d, targets)
+        if mask.any():
+            rows_d.append(d[mask])
+            rows_c.append(contrib(j)[mask])
+            rows_t.append(np.full(int(mask.sum()), codes[j], dtype=np.int32))
     if not rows_d:
-        return 0.0
-    _, scores = _exact_scores(
-        np.concatenate(rows_d), np.concatenate(rows_t), np.concatenate(rows_c)
+        return np.empty(0, np.int64), np.empty(0)
+    return _exact_scores(np.concatenate(rows_d), np.concatenate(rows_t), np.concatenate(rows_c))
+
+
+def _range_topk(doc: np.ndarray, score: np.ndarray, k: int):
+    """One query's top-k candidates in a range (quantized contract order)."""
+    if doc.size > k:
+        order = np.lexsort((doc, -np.round(score, 6)))[:k]
+        doc, score = doc[order], score[order]
+    return doc, score
+
+
+def _result_frame(qids: list, docs: list, scores: list) -> pd.DataFrame:
+    """An evaluator's RESULT_SCHEMA rows: each query's run of candidates."""
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(np.array(qids, dtype=object), [d.size for d in docs]),
+            "doc_id": np.concatenate(
+                [np.empty(0, np.int64), *(d.astype(np.int64) for d in docs)]
+            ),
+            "score": np.concatenate([np.empty(0), *scores]),
+        }
     )
-    if scores.size < k:
-        return 0.0
-    return float(np.partition(scores, -k)[-k])
 
 
-def make_wand_range_evaluator(
+def make_wand_evaluator(
     queries_w: dict[str, dict[str, float]],
     k: int,
     k1: float,
@@ -234,30 +155,111 @@ def make_wand_range_evaluator(
     avgdl: float,
     quantize: bool = False,
 ):
-    """Per-RANGE evaluator: runs the per-query block-max evaluation for
-    every query in one group call. Query weights are driver-known and
-    ride the closure, so the block rows are scanned ONCE per range —
-    no per-query row duplication through a qterms join, and |ranges|
-    groups instead of |queries| x |ranges| (r6; the Arrow round-trip
-    per group set the stage's floor). Scores are produced by the SAME
-    per-query evaluator, so they stay bit-identical."""
-    inner = make_wand_evaluator(k, k1, b, avgdl, quantize=quantize)
+    """Per-RANGE block-max evaluator for every query of the call.
+    ``queries_w[qid]`` maps each query term to its weight (qtf * idf).
+    The weights are driver-known and ride the closure, so a range's
+    block rows cross the Arrow boundary once for all queries, with no
+    qterms join, and each block's doc ids and payload are decoded at
+    most once per range."""
 
     def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
+        term = pdf["term"]
+        _, codes = np.unique(term.to_numpy(), return_inverse=True)
+        docs = [codec.delta_decode(codec.varint_decode(bytes(x))) for x in pdf["docs_varint"]]
+        max_tf = pdf["max_tf"].to_numpy(np.float64)
+        # quantization is monotone, so q(min_dl) still lower-bounds
+        # every quantized doclen in the block: the bound stays valid
+        min_dl = doclen_np(pdf["min_dl"].to_numpy(), quantize)
+        payloads: dict[int, tuple] = {}
+
+        def tf_dl(i: int) -> tuple:
+            if i not in payloads:
+                payloads[i] = (
+                    codec.varint_decode(bytes(pdf["tfs_varint"].iat[i])).astype(np.float64),
+                    doclen_np(codec.varint_decode(bytes(pdf["dls_varint"].iat[i])), quantize),
+                )
+            return payloads[i]
+
+        qids, out_d, out_s = [], [], []
         for qid in sorted(queries_w):
             wmap = queries_w[qid]
-            sub = pdf[pdf["term"].isin(wmap)]
-            if len(sub) == 0:
+            rows = np.flatnonzero(term.isin(wmap).to_numpy())
+            if rows.size == 0:
                 continue
-            sub = sub.copy()
-            sub["w"] = sub["term"].map(wmap)
-            frames.append(inner((qid,), sub))
-        if not frames:
-            return _empty_result()
-        return pd.concat(frames, ignore_index=True)
+            w = np.array([wmap[t] for t in term.iloc[rows]])
+            qdocs = [docs[i] for i in rows]
+
+            def score(targets):
+                return _score_docs(
+                    codes[rows], qdocs,
+                    lambda j: contrib_np(w[j], *tf_dl(rows[j]), avgdl, k1, b),
+                    targets,
+                )
+
+            # ---- phase 1: per-doc upper bounds from the doc ids only ----
+            # The partial score is increasing in tf and decreasing in dl,
+            # so the contribution at (max_tf, min_dl) bounds every posting
+            # of the block under the CURRENT avgdl — safe even when blocks
+            # were built while the corpus (and its avgdl) was growing
+            # (streamed micro-batches).
+            sizes = [d.size for d in qdocs]
+            ubs = contrib_np(w, max_tf[rows], min_dl[rows], avgdl, k1, b)
+            u_doc, doc_ub = _exact_scores(  # segment-sum of the bounds
+                np.concatenate(qdocs), np.repeat(codes[rows], sizes), np.repeat(ubs, sizes)
+            )
+            if u_doc.size > 4 * k:
+                # threshold: the kth-best exact score of the 4k
+                # highest-bound docs, a lower bound on the final kth-best
+                _, seed = score(u_doc[np.argpartition(doc_ub, -4 * k)[-4 * k :]])
+                t = float(np.partition(seed, -k)[-k]) if 0 < k <= seed.size else 0.0
+                # 1e-6 margin: an excluded doc may not round-tie the kth
+                # rounded score under the quantized ranking contract
+                if t > 0.0:
+                    u_doc = u_doc[doc_ub >= t - 1e-6]
+            # ---- phase 2: exact scores of the surviving docs ----
+            d, s = _range_topk(*score(u_doc), k)
+            if d.size:
+                qids.append(qid)
+                out_d.append(d)
+                out_s.append(s)
+        return _result_frame(qids, out_d, out_s)
 
     return evaluate
+
+
+def _lookup_terms(
+    termdict: DataFrame, terms: list[str], term_rows: list[dict] | None
+) -> list[dict]:
+    """``{term, df, term_bucket}`` rows of the query terms: the caller's
+    pre-looked-up ``term_rows`` (e.g. ``InvertedIndex.lookup_terms``), or
+    one filtered collect of the term dictionary (driver-side, tiny)."""
+    if term_rows is not None:
+        return term_rows
+    return [
+        r.asDict()
+        for r in termdict.filter(F.col("term").isin(terms))
+        .select("term", "df", "term_bucket")
+        .collect()
+    ]
+
+
+def _per_range_topk(
+    blocks: DataFrame, td: list[dict], terms: list[str], cols: list[str], evaluator, k: int
+) -> DataFrame:
+    """Run ``evaluator`` once per doc range over the candidate blocks of
+    ``terms`` (bucket and term rows in ``td``), then rank the per-range
+    candidates with ``bm25.topk``."""
+    from ..shipping import ensure_shipped
+
+    ensure_shipped(blocks.sparkSession)
+    bucket_of = {r["term"]: int(r["term_bucket"]) for r in td}
+    buckets = sorted({bucket_of[t] for t in terms})
+    cand = (
+        blocks.filter(F.col("term_bucket").isin(buckets))  # partition pruning
+        .filter(F.col("term").isin(terms))  # pushdown
+        .select(*cols)  # prune: only the evaluator's columns cross Arrow
+    )
+    return topk(cand.groupBy("range_id").applyInPandas(evaluator, schema=RESULT_SCHEMA), k)
 
 
 def wand_topk(
@@ -274,57 +276,17 @@ def wand_topk(
     ``term_rows`` — pre-looked-up ``{term, df, term_bucket}`` dicts for
     the query terms (e.g. ``InvertedIndex.lookup_terms``): skips the
     per-call Spark filter+collect job over the term dictionary."""
-    from ..shipping import ensure_shipped
-
-    spark = blocks.sparkSession
-    ensure_shipped(spark)
     n_docs, avgdl = corpus
     qrows = analyze_queries(queries)
-    terms = sorted({t for _, t, _ in qrows})
-    # driver-side term lookup (tiny): df + bucket per query term
-    td = (
-        term_rows
-        if term_rows is not None
-        else [
-            r.asDict()
-            for r in termdict.filter(F.col("term").isin(terms))
-            .select("term", "df", "term_bucket")
-            .collect()
-        ]
-    )
+    td = _lookup_terms(termdict, sorted({t for _, t, _ in qrows}), term_rows)
     df_map = {r["term"]: int(r["df"]) for r in td}
-    buckets = sorted({int(r["term_bucket"]) for r in td})
-    qterm_rows = [
-        (qid, t, float(qtf) * idf_fn(n_docs, df_map[t]))
-        for qid, t, qtf in qrows
-        if t in df_map
-    ]
-    if not qterm_rows:
-        empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
-        return empty.select(
-            "query_id", F.lit(1).alias("rank"), "doc_id", "score"
-        ).limit(0)
     queries_w: dict[str, dict[str, float]] = {}
-    for qid, t, w in qterm_rows:
-        queries_w.setdefault(qid, {})[t] = w
-    cand = (
-        blocks.filter(F.col("term_bucket").isin(buckets))  # partition pruning
-        .filter(F.col("term").isin([t for t in terms if t in df_map]))  # pushdown
-        .select(*WAND_INPUT_COLS)  # prune: no positions/metadata bytes cross Arrow
+    for qid, t, qtf in qrows:
+        if t in df_map:
+            queries_w.setdefault(qid, {})[t] = float(qtf) * idf_fn(n_docs, df_map[t])
+    if not queries_w:
+        return empty_search_result(blocks.sparkSession)
+    evaluator = make_wand_evaluator(
+        queries_w, k, cfg.bm25.k1, cfg.bm25.b, avgdl, quantize=cfg.bm25.quantize_doclen
     )
-    per_range = cand.groupBy("range_id").applyInPandas(
-        make_wand_range_evaluator(
-            queries_w, k, cfg.bm25.k1, cfg.bm25.b, avgdl,
-            quantize=cfg.bm25.quantize_doclen,
-        ),
-        schema=RESULT_SCHEMA,
-    )
-    ranked = per_range.select(
-        "query_id", "doc_id", F.round(F.col("score"), 6).alias("score")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k).select("query_id", "rank", "doc_id", "score")
+    return _per_range_topk(blocks, td, sorted(df_map), WAND_INPUT_COLS, evaluator, k)

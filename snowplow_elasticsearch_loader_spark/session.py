@@ -50,7 +50,9 @@ def apply_malloc_tuning() -> None:
     to this guest's free-page-reporting kernel and the next group
     re-faults them at ~0.4 ms/fault under 8-way concurrency — measured
     298 s of pure kernel time in the block-emit phase per 44-group run
-    (scripts/mp_blocks2.py), 0.0 s with mmap disabled. Worker RSS then
+    of the per-range block builder in 8 plain worker processes (outside
+    Spark, per-phase user/kernel time splits), 0.0 s with mmap disabled
+    (BASELINE.md, "Round-4 root cause"). Worker RSS then
     plateaus at its peak working set, which the SPIMI range cap bounds
     by construction.
 

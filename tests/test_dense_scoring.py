@@ -11,7 +11,13 @@ from types import SimpleNamespace
 import numpy as np
 import pytest
 
-from snowplow_elasticsearch_loader_spark.config import EngineConfig
+from snowplow_elasticsearch_loader_spark.config import BM25Config, EngineConfig
+from snowplow_elasticsearch_loader_spark.operators.bm25 import (
+    contrib_col,
+    contrib_np,
+    quantize_doclen_col,
+    quantize_doclen_np,
+)
 from snowplow_elasticsearch_loader_spark.operators.query_engine import (
     SEQUENTIAL_SUM_MAX_ADDENDS,
     DenseAccumulator,
@@ -145,3 +151,36 @@ def test_accumulator_bits_match_exact_scores_up_to_8_terms(n_terms):
             differs += got_s[order].tobytes() != want_s.tobytes()
     # past 8 terms numpy sums pairwise, hence the _exact_scores fallback
     assert n_terms <= SEQUENTIAL_SUM_MAX_ADDENDS or differs
+
+
+@pytest.mark.parametrize("quantize", [False, True])
+@pytest.mark.parametrize("k1,b", [(K1, B), (0.9, 0.4)])
+def test_contrib_col_and_contrib_np_are_bit_identical(spark, quantize, k1, b):
+    """The Spark and numpy BM25 contributions are one formula: same raw
+    float64 bits on random weights, tfs and doclens (up to 2^22, past
+    the 2^16 where quantization drops more than one low bit)."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(11)
+    n = 3000
+    w = rng.uniform(0.001, 25.0, n)
+    tf = rng.integers(1, 300, n)
+    dl = np.concatenate(
+        [rng.integers(1, 1 << 16, n // 2), rng.integers(1 << 16, 1 << 22, n - n // 2)]
+    )
+    cfg = EngineConfig(bm25=BM25Config(k1=k1, b=b, quantize_doclen=quantize))
+    df = spark.createDataFrame(
+        [(i, float(w[i]), int(tf[i]), int(dl[i])) for i in range(n)],
+        "i int, w double, tf int, dl long",
+    )
+    dl_col = quantize_doclen_col("dl") if quantize else F.col("dl")
+    dl_np = quantize_doclen_np(dl) if quantize else dl.astype(np.float64)
+    for avgdl in (1.0, 57.3125, float(rng.uniform(10.0, 5000.0))):
+        rows = (
+            df.select("i", contrib_col(F.col("w"), F.col("tf"), dl_col, avgdl, cfg).alias("c"))
+            .orderBy("i")
+            .collect()
+        )
+        got = np.array([r["c"] for r in rows], dtype=np.float64)
+        want = contrib_np(w, tf.astype(np.float64), dl_np, avgdl, k1, b)
+        assert np.array_equal(got.view(np.int64), want.view(np.int64))

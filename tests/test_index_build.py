@@ -190,6 +190,25 @@ def test_query_engine_warm_matches_wand(spark, idx):
     assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
 
 
+def test_phrase_topk_single_term_matches_wand_quantized(idx):
+    """A one-token phrase matches every doc holding the term, so its
+    scores are the term's BM25 contributions: under quantize_doclen the
+    phrase path must score the quantized doclen exactly as wand does."""
+    from dataclasses import replace
+
+    from snowplow_elasticsearch_loader_spark.operators.phrase import phrase_topk
+
+    qcfg = replace(CFG, bm25=replace(CFG.bm25, quantize_doclen=True))
+    singles = [("s-error", "error"), ("s-agent", "agent"), ("s-tool", "tool")]
+    key = lambda rows: sorted(  # noqa: E731
+        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows
+    )
+    args = (idx.blocks, idx.termdict, idx.corpus(), singles)
+    got = key(phrase_topk(*args, k=10, cfg=qcfg).collect())
+    want = key(wand.wand_topk(*args, k=10, cfg=qcfg).collect())
+    assert got == want and len(got) == 30
+
+
 def test_size_violation_routed(spark):
     from snowplow_elasticsearch_loader_spark.operators.docs import split_good_bad
 
@@ -409,7 +428,7 @@ def test_query_engine_warm_cap_never_collects_full_dictionary(
 
     ref = QE.QueryEngine(idx, CFG, warm=True)
     assert ref._term_cache is not None  # under the cap: warm collect ran
-    monkeypatch.setenv("SPARK_GRAFT_WARM_MAX_TERMS", "1")
+    monkeypatch.setattr(QE, "WARM_MAX_TERMS", 1)
 
     def _boom(*a, **kw):  # any full-dictionary collect would call this
         raise AssertionError("full termdict collect ran despite cap")
