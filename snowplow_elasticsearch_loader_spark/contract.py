@@ -291,20 +291,13 @@ def q_bm25_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     order the whole BM25 contract uses). At corpus scale this is the
     difference between ranking k*page docs (from/size) and ranking
     only what lies beyond the cursor."""
-    from .operators import bm25
-
     docs = _docs(spark, sf_dir)
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    ).select("query_id", "doc_id", F.round("score", 6).alias("score"))
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG).select(
+        "query_id", "doc_id", F.round("score", 6).alias("score")
+    )
     # cursor = sort key of the page-1 tail (rank DEFAULT_K); tiny
     # (one row per query), broadcast against the scored set
     cur = (
@@ -495,13 +488,7 @@ def q_bm25_collapse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    posts_q = posts.filter(F.col("term").isin(qterm_list))
-    scored = bm25.score_candidates(posts_q, ds, qterms, avgdl, CFG).select(
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG).select(
         "query_id", "doc_id", F.round("score", 6).alias("score")
     )
     scored = scored.join(docs.select("doc_id", "source"), "doc_id")
@@ -709,8 +696,7 @@ def _fuzzy_expand_topk(spark: SparkSession, sf_dir: str, damerau: bool) -> DataF
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     probes = literal_df(spark, [(p,) for p in _FUZZY_PROBES], "query_id string")
     probe_vars = probes.select(
         "query_id", F.explode(_deletion_variants("query_id")).alias("v")
@@ -810,8 +796,7 @@ def q_explain_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
     qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
     qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
@@ -860,8 +845,7 @@ def q_mlt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     src = (
         posts.filter(F.col("doc_id").isin(_MLT_DOCS))
         .join(ts, "term")
@@ -994,8 +978,7 @@ def q_min_should_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
     qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
     qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
@@ -1051,13 +1034,7 @@ def q_top_hits_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    posts_q = posts.filter(F.col("term").isin(qterm_list))
-    scored = bm25.score_candidates(posts_q, ds, qterms, avgdl, CFG).select(
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG).select(
         "query_id", "doc_id", F.round("score", 6).alias("score")
     )
     scored = scored.join(docs.select("doc_id", "lang"), "doc_id")
@@ -1424,12 +1401,7 @@ def q_span_near_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_span_near() -> str:
@@ -1532,13 +1504,7 @@ def q_boosting_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    posts_q = posts.filter(F.col("term").isin(qterm_list))
-    scored = bm25.score_candidates(posts_q, ds, qterms, avgdl, CFG)
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
     neg = (
         posts.filter(F.col("term").isin(_NEG_TERMS))
         .select("doc_id")
@@ -1607,7 +1573,6 @@ def q_multi_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     toks = docs.select("doc_id", tokens_col("text").alias("tk"))
-    qset = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
     sides = []
     for fname, fcol in (
         ("text", F.col("tk")),
@@ -1620,14 +1585,8 @@ def q_multi_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("int").alias("tf"))
         )
         ds = ft.select("doc_id", F.size("ftk").alias("doclen"))
-        row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-        n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
         ts = P.term_stats(posts)
-        tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-        qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-        sc = bm25.score_candidates(
-            posts.filter(F.col("term").isin(qset)), ds, qterms, avgdl, CFG
-        )
+        sc = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
         sides.append(sc.withColumnRenamed("score", f"s_{fname}"))
     s_text, s_title = sides
     ti = F.coalesce(F.col("s_title"), F.lit(0.0))
@@ -1722,14 +1681,7 @@ def q_function_score_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    )
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
     dl = F.col("doclen").cast("double")
     boosted = scored.join(ds, "doc_id").select(
         "query_id",
@@ -2082,14 +2034,7 @@ def q_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, PHRASE_QUERIES)
-    qterms = bm25.query_term_weights(spark, PHRASE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(PHRASE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    )
+    scored = bm25.score_queries(posts, ds, ts, PHRASE_QUERIES, CFG)
     window = bm25.topk(scored, _RESCORE_WINDOW)  # (query_id, rank, doc_id, score)
     phrases = literal_df(
         spark,
@@ -3752,8 +3697,7 @@ def q_terms_set_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     dfs = {
         r["term"]: int(r["df"])
         for r in ts.filter(F.col("term").isin(_TERMS_SET)).collect()
@@ -3788,12 +3732,7 @@ def q_terms_set_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_terms_set() -> str:
@@ -3968,14 +3907,7 @@ def q_rank_feature_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    )
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
     feat = docs.select(
         "doc_id",
         (
@@ -3992,12 +3924,7 @@ def q_rank_feature_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round(F.round(F.col("score"), 6) + F.col("_sat"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(total, DEFAULT_K)
 
 
 SQL_RANK_FEATURE_TOPK = f"""
@@ -4394,8 +4321,7 @@ def q_dis_max_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
     qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
     qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
@@ -4414,12 +4340,7 @@ def q_dis_max_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 SQL_DIS_MAX_TOPK = f"""
@@ -4572,14 +4493,7 @@ def q_script_score_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    )
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
     feat = docs.select(
         "doc_id",
         (
@@ -4592,12 +4506,7 @@ def q_script_score_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round(F.round(F.col("score"), 6) * F.col("_mult"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(total, DEFAULT_K)
 
 
 SQL_SCRIPT_SCORE_TOPK = f"""
@@ -4774,12 +4683,7 @@ def q_intervals_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_intervals() -> str:
@@ -4860,15 +4764,10 @@ def q_sampler_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
     sq = [(qid, qt) for qid, qt in REFERENCE_QUERIES if qid == _SAMPLER_QUERY_ID]
-    tdf = bm25.collect_query_term_stats(ts, sq)
-    qterms = bm25.query_term_weights(spark, sq, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(sq)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    ).select("doc_id", F.round("score", 6).alias("score"))
+    scored = bm25.score_queries(posts, ds, ts, sq, CFG).select(
+        "doc_id", F.round("score", 6).alias("score")
+    )
     lw = Window.partitionBy("lang").orderBy(F.desc("score"), F.asc("doc_id"))
     gw = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     samp = (
@@ -5865,14 +5764,7 @@ def q_min_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    )
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
     return (
         scored.select("query_id", "doc_id", F.round("score", 6).alias("score"))
         .filter(F.col("score") >= _MIN_SCORE)
@@ -6053,12 +5945,7 @@ def q_decay_function_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round(F.col("score") * F.col("_mult"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(total, DEFAULT_K)
 
 
 SQL_DECAY_FUNCTION_TOPK = f"""
@@ -6835,12 +6722,7 @@ def q_distance_feature_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = scored.join(feat, "doc_id").select(
         "query_id", "doc_id", F.round(F.col("score") + F.col("_boost"), 6).alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(total, DEFAULT_K)
 
 
 SQL_DISTANCE_FEATURE_TOPK = f"""
@@ -6916,12 +6798,7 @@ def q_match_bool_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        combined.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(combined, DEFAULT_K)
 
 
 def _sql_match_bool_prefix(k: int = DEFAULT_K) -> str:
@@ -7049,12 +6926,7 @@ def q_indices_boost_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (micro.cast("double") / F.lit(1e6)).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(total, DEFAULT_K)
 
 
 SQL_INDICES_BOOST_TOPK = f"""
@@ -7199,8 +7071,7 @@ def q_simple_query_string_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     pos_terms = sorted({t for _, t, k in _SQS_CLAUSES if k != "not"})
     not_terms = sorted({t for _, t, k in _SQS_CLAUSES if k == "not"})
     pseudo = [
@@ -7404,12 +7275,7 @@ def q_span_or_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.col("_mb"), _contrib("tfb", idfm[F.col("tb")])).otherwise(F.lit(0.0))
     )
     scored = matched.select("query_id", "doc_id", F.round(score, 6).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_span_or() -> str:
@@ -7549,12 +7415,7 @@ def q_span_within_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     score = bm25.contrib_col(idfm[F.col("tl")], F.col("tfl"), F.col("doclen"), avgdl, CFG)
     scored = matched.select("query_id", "doc_id", F.round(score, 6).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_span_within() -> str:
@@ -7955,12 +7816,7 @@ def q_span_containing_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     score = _contrib("tf1", idfm[F.col("t1")]) + _contrib("tf2", idfm[F.col("t2")])
     scored = matched.select("query_id", "doc_id", F.round(score, 6).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_span_containing() -> str:
@@ -8090,8 +7946,7 @@ def q_nested_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
+    n_docs, avgdl = bm25.corpus_stats(ds)
     dfv = {r["term"]: int(r["df"]) for r in ts.filter(F.col("term") == _NESTED_TERM).collect()}
     w = F.lit(bm25.idf(n_docs, dfv.get(_NESTED_TERM, 0)))
     contrib = bm25.contrib_col(w, F.col("tf"), F.col("doclen"), avgdl, CFG)
@@ -8282,12 +8137,7 @@ def q_span_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_span_multi() -> str:
@@ -8366,14 +8216,7 @@ def q_rank_feature_log_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    tdf = bm25.collect_query_term_stats(ts, REFERENCE_QUERIES)
-    qterms = bm25.query_term_weights(spark, REFERENCE_QUERIES, tdf, n_docs)
-    qterm_list = sorted({t for _, t, _ in bm25.analyze_queries(REFERENCE_QUERIES)})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(qterm_list)), ds, qterms, avgdl, CFG
-    )
+    scored = bm25.score_queries(posts, ds, ts, REFERENCE_QUERIES, CFG)
     feat = docs.select(
         "doc_id",
         (
@@ -8386,12 +8229,7 @@ def q_rank_feature_log_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round(F.round(F.col("score"), 6) + F.col("_logf"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        total.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(total, DEFAULT_K)
 
 
 SQL_RANK_FEATURE_LOG_TOPK = f"""
@@ -8462,12 +8300,7 @@ def q_sparse_vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= DEFAULT_K)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(scored, DEFAULT_K)
 
 
 def _sql_sparse_vector() -> str:

@@ -1,4 +1,4 @@
-"""BM25 top-k retrieval — the relational ("naive") path (SURVEY E7/E8).
+"""BM25 top-k retrieval — the relational scaffold (SURVEY E7/E8).
 
 The reference's only query surface is ES ``_search``
 (it/TestHelpers.scala:157-201); scoring is delegated to Lucene's
@@ -22,6 +22,20 @@ block-max WAND fast path, and the numpy oracle:
   ``F.aggregate`` over a sorted array — bit-exact at any parallelism;
 - ranking quantizes scores to 1e-6 (ties then break on doc_id asc),
   the same contract the DuckDB oracle implements.
+
+One scaffold, shared by the naive path (``bm25_topk_naive``) and every
+relational contract builder:
+
+- ``corpus_stats``: the one driver job for (N, avgdl);
+- ``score_queries``: corpus stats, query-term weights, the query-term
+  filter on postings and ``score_candidates`` -> (query_id, doc_id,
+  score) for every candidate doc;
+- ``topk``: round the score to 6 places, then ``rank``;
+- ``rank``: the per-query window (score desc, doc_id asc) cut at k.
+
+The fused path (``bm25_topk_fused``) computes its corpus stats and tf
+inside one corpus scan, then shares the term-ordered fold and ``topk``;
+so do the WAND and phrase evaluators' rank tails.
 
 Plan shape: query terms are a tiny literal table -> ``F.broadcast``
 joined against postings (map-side, no shuffle of the big side), then a
@@ -176,13 +190,51 @@ def _sum_in_term_order(cand: DataFrame, avgdl: float, cfg: EngineConfig) -> Data
 def topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k under the quantized-score contract."""
     score_r = F.round(F.col("score"), 6).alias("score")
-    ranked = scored.select("query_id", "doc_id", score_r).withColumn(
+    return rank(scored.select("query_id", "doc_id", score_r), k)
+
+
+def rank(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, doc_id, score): the first ``k`` rows of each
+    query by score desc, doc_id asc. ``score`` is ranked as given; it
+    is already quantized (``topk`` rounds it to 6 places first)."""
+    ranked = scored.withColumn(
         "rank",
         F.row_number().over(
             Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         ),
     )
     return ranked.filter(F.col("rank") <= k).select("query_id", "rank", "doc_id", "score")
+
+
+def corpus_stats(docstats: DataFrame) -> tuple[int, float]:
+    """(n_docs, avgdl) of a (doc_id, doclen) frame in one driver job;
+    avgdl is 0.0 for an empty corpus (no doc then has a score)."""
+    row = docstats.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
+    n_docs = int(row["n"])
+    avgdl = float(row["s"]) / float(n_docs) if n_docs else 0.0
+    return n_docs, avgdl
+
+
+def score_queries(
+    postings: DataFrame,
+    docstats: DataFrame,
+    term_stats: DataFrame,
+    queries: Sequence[tuple[str, str]],
+    cfg: EngineConfig = DEFAULT_CONFIG,
+) -> DataFrame:
+    """(query_id, doc_id, score) of every doc that holds a query term:
+    corpus stats, query-term weights and ``score_candidates``."""
+    n_docs, avgdl = corpus_stats(docstats)
+    tdf = collect_query_term_stats(term_stats, queries)
+    qterms = query_term_weights(postings.sparkSession, queries, tdf, n_docs)
+    # only query terms can contribute: filtering BEFORE score_candidates
+    # lets Catalyst push the term predicate below the postings groupBy,
+    # so the full-vocabulary aggregation (and its corpus-sized shuffle)
+    # never happens — non-query terms are dropped right after the
+    # explode. Results are identical by construction.
+    qterm_list = sorted({t for _, t, _ in analyze_queries(queries)})
+    posts_q = postings.filter(F.col("term").isin(qterm_list))
+    return score_candidates(posts_q, docstats, qterms, avgdl, cfg)
 
 
 def bm25_topk_naive(
@@ -192,29 +244,9 @@ def bm25_topk_naive(
     queries: Sequence[tuple[str, str]],
     k: int = 10,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    corpus: tuple[int, float] | None = None,
 ) -> DataFrame:
-    """End-to-end naive path. ``corpus`` = (n_docs, avgdl) if already
-    known (avoids one job); otherwise computed from docstats."""
-    spark = postings.sparkSession
-    if corpus is None:
-        row = docstats.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
-        ).collect()[0]
-        n_docs, avgdl = int(row["n"]), float(row["s"]) / float(row["n"])
-    else:
-        n_docs, avgdl = corpus
-    tdf = collect_query_term_stats(term_stats, queries)
-    qterms = query_term_weights(spark, queries, tdf, n_docs)
-    # only query terms can contribute: filtering BEFORE score_candidates
-    # lets Catalyst push the term predicate below the postings groupBy,
-    # so the full-vocabulary aggregation (and its corpus-sized shuffle)
-    # never happens — non-query terms are dropped right after the
-    # explode. Results are identical by construction.
-    qterm_list = sorted({t for _, t, _ in analyze_queries(queries)})
-    posts_q = postings.filter(F.col("term").isin(qterm_list))
-    scored = score_candidates(posts_q, docstats, qterms, avgdl, cfg)
-    return topk(scored, k)
+    """End-to-end naive path: ``score_queries`` then ``topk``."""
+    return topk(score_queries(postings, docstats, term_stats, queries, cfg), k)
 
 
 def bm25_topk_fused(
@@ -263,12 +295,10 @@ def bm25_topk_fused(
         ],
     ).collect()[0]
     n_docs = int(row["n"])
-    avgdl = float(row["s"]) / float(n_docs)
-    tdf = {
-        t: int(row[f"_df{i}"])
-        for i, t in enumerate(qterm_list)
-        if int(row[f"_df{i}"]) > 0
-    }
+    avgdl = float(row["s"]) / float(n_docs) if n_docs else 0.0
+    # over an empty corpus every SUM is NULL: no term then has a df
+    tdf = {t: int(row[f"_df{i}"] or 0) for i, t in enumerate(qterm_list)}
+    tdf = {t: df for t, df in tdf.items() if df > 0}
     qterms = query_term_weights(spark, queries, tdf, n_docs)
     # ---- scoring: one corpus pass, no postings shuffle, no doc join ----
     entries = F.transform(

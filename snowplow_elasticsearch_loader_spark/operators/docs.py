@@ -28,7 +28,6 @@ any parallelism level, no global shuffle to one task, all JVM-side.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -43,8 +42,8 @@ from ..functions.analyze import tokens_col
 #: (non-footer) path — scale-adaptive parallelism (guide §2.2/§2.4):
 #: inputs below ~20k rows/bucket never benefit from the 4x-cores bucket
 #: fan-out and pay its per-task scheduling overhead instead. Ranks are
-#: bucket-invariant, so this knob can never change output values.
-_RANK_ROWS_PER_BUCKET = int(os.environ.get("SPARK_GRAFT_RANK_ROWS_PER_BUCKET", "20000"))
+#: bucket-invariant, so this constant can never change output values.
+_RANK_ROWS_PER_BUCKET = 20000
 
 BADROW_SCHEMA = T.StructType(
     [
@@ -467,8 +466,9 @@ def assign_doc_ids(
         # on it, e.g. a parquet-footer total before filters — pass it
         # to avoid a driver-synchronized count() job (Amdahl at build
         # time). Over-estimates only make the sample/fan-out richer,
-        # never change ranks.
-        n = n_rows if n_rows is not None else df.count()
+        # never change ranks. A bound of 0 counts as unknown, like
+        # None: a row that exists must never get a NULL doc_id.
+        n = n_rows or df.count()
         if n == 0:
             return transcripts.withColumn("doc_id", F.lit(None).cast("long"))
         # Ranks are invariant to the boundary choice, so bucket count is

@@ -109,24 +109,15 @@ def query_string_topk(
 ) -> DataFrame:
     """Top-k (query_id, rank, doc_id, score) for simple_query_string
     queries over the relational postings layer."""
-    spark = docs.sparkSession
     parsed = {qid: parse_query_string(qtext) for qid, qtext in queries}
     posts = P.build_postings(docs)
     ds = P.doc_stats(docs)
     ts = P.term_stats(posts)
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    n_docs = int(row["n"])
-    avgdl = float(row["s"]) / float(n_docs) if n_docs else 0.0
 
     # ---- scoring: reuse the BM25 contract over synthetic flat queries
     # whose text is the scored-term bag (qtf = occurrence count) ----
     flat = [(qid, " ".join(p.scored_terms)) for qid, p in parsed.items() if p.scored_terms]
-    tdf = bm25.collect_query_term_stats(ts, flat)
-    qterms = bm25.query_term_weights(spark, flat, tdf, n_docs)
-    all_scored = sorted({t for p in parsed.values() for t in p.scored_terms})
-    scored = bm25.score_candidates(
-        posts.filter(F.col("term").isin(all_scored)), ds, qterms, avgdl, cfg
-    )
+    scored = bm25.score_queries(posts, ds, ts, flat, cfg)
 
     # ---- per-query candidate sets (filter context) ----
     # each clause prunes through the postings with the term filter

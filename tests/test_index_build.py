@@ -461,6 +461,21 @@ def test_bm25_fused_equals_naive(spark, idx):
     assert key(fused.collect()) == key(naive.collect())
 
 
+def test_bm25_over_empty_corpus_returns_no_hits(idx):
+    """An index with no documents answers every query with zero hits,
+    as Elasticsearch does, on the naive and the fused path alike (SUM
+    over no rows is NULL: avgdl and df must not be read from it)."""
+    empty = idx.documents.limit(0)
+    posts = build_postings(empty)
+    naive = bm25.bm25_topk_naive(
+        posts, doc_stats(empty), term_stats(posts), QUERIES, k=10, cfg=CFG
+    )
+    fused = bm25.bm25_topk_fused(empty, QUERIES, k=10, cfg=CFG)
+    for df in (naive, fused):
+        assert df.columns == ["query_id", "rank", "doc_id", "score"]
+        assert df.collect() == []
+
+
 def test_lookup_terms_matches_spark_filter(idx):
     """Local pyarrow termdict probe returns the same rows as the Spark
     filtered collect (r6 wand/query-path optimization)."""
@@ -503,3 +518,16 @@ def test_doc_id_adaptive_ranges_identical_ids(spark, monkeypatch):
     adaptive_many = assign_doc_ids(tr).select(*cols)
     assert explicit.exceptAll(adaptive_many).count() == 0
     assert adaptive_many.exceptAll(explicit).count() == 0
+
+
+def test_assign_doc_ids_zero_row_bound_still_assigns_ids(spark):
+    """``n_rows`` is an upper bound from the caller; 0 proves nothing
+    about the rows, so it falls back to a count and every existing row
+    still gets a dense, non-null doc_id."""
+    tr = (
+        synth_transcripts(spark, n_convs=5, seed=7, with_anomalies=False)
+        .orderBy("conv_id", "turn_idx")
+        .limit(3)
+    )
+    ids = [r["doc_id"] for r in assign_doc_ids(tr, n_rows=0).select("doc_id").collect()]
+    assert sorted(ids) == [0, 1, 2]

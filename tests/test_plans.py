@@ -7,6 +7,8 @@ checks at sf0.01 but regress at 100 TB — so the plan itself is tested.
 
 from __future__ import annotations
 
+import pytest
+
 from snowplow_elasticsearch_loader_spark import contract as C
 from snowplow_elasticsearch_loader_spark.plans import assert_in_plan, assert_not_in_plan
 
@@ -18,8 +20,19 @@ def test_lineitem_filter_pushdown(spark, sf_tiny):
     assert_in_plan(df, "HashAggregate")
 
 
-def test_bm25_naive_broadcasts_query_terms(spark, sf_tiny):
-    df = C.SPARK_QUERIES["q_bm25_topk"](spark, sf_tiny)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_bm25_topk",  # the fused path
+        # the shared naive scaffold: bm25.score_queries + bm25.topk
+        "q_bm25_filtered_topk",
+        "q_bm25_collapse_topk",
+        "q_function_score_topk",
+        "q_query_string_topk",
+    ],
+)
+def test_bm25_naive_broadcasts_query_terms(spark, sf_tiny, name):
+    df = C.SPARK_QUERIES[name](spark, sf_tiny)
     assert_in_plan(df, "BroadcastHashJoin", "WindowGroupLimit")
     assert_not_in_plan(df, "CartesianProduct")
 
