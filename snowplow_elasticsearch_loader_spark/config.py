@@ -40,16 +40,14 @@ class IndexConfig:
     blocks); ``docs_per_range`` is the doc-id range width used to split
     hot terms' postings across groups (the data-driven "salting" of
     SURVEY §4.1 — deterministic because it keys on doc_id, not on
-    partition placement); ``hot_df_threshold`` is the document
-    frequency above which a term is range-split; ``term_buckets`` is
-    the on-disk partition count of the blocks table (query-side
-    partition pruning, the analog of ES date-sharded index routing,
-    reference core/Processing.scala:162-171).
+    partition placement); ``term_buckets`` is the on-disk partition
+    count of the blocks table (query-side partition pruning, the analog
+    of ES date-sharded index routing, reference
+    core/Processing.scala:162-171).
     """
 
     block_size: int = 128
     docs_per_range: int = 1 << 20
-    hot_df_threshold: int = 1 << 16
     term_buckets: int = 32
     # store positional postings (token index per occurrence, delta+
     # varint) — powers match_phrase from the index instead of a corpus
@@ -106,13 +104,6 @@ class EngineConfig:
     bm25: BM25Config = field(default_factory=BM25Config)
     index: IndexConfig = field(default_factory=IndexConfig)
     limits: LimitsConfig = field(default_factory=LimitsConfig)
-    # Unicode word tokenization + lowercase: the ES `standard` analyzer
-    # contract (SURVEY E1). Java and RE2 both support \p{L}/\p{N}, so
-    # the same pattern is used by Spark and the DuckDB oracle.
-    token_pattern: str = r"[\p{L}\p{N}]+"
-    # storage format: parquet in this sandbox; 'iceberg' drops in when
-    # the runtime jar is on the classpath (same writer API).
-    table_format: str = "parquet"
     shard_date_format: str = "yyyy-MM-dd"
 
     @staticmethod

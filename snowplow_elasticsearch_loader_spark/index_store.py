@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 
 from .config import DEFAULT_CONFIG, EngineConfig
 from .shipping import ensure_shipped
-from .operators import index_build
+from .operators import bm25, index_build
 from .operators.docs import assign_doc_ids, badrows_from, stage_validated
 
 CHECKPOINT_SCHEMA = T.StructType(
@@ -319,20 +319,12 @@ def _append(spark: SparkSession, path: str, rows: list, schema: T.StructType) ->
         spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode("append").parquet(path)
 
 
-def _write_corpus(spark: SparkSession, path: str, n_docs: int, avgdl: float) -> None:
-    """Overwrite the singleton corpus-stats table (same fast path)."""
-    target = resolve_table_dir(path, "corpus")
+def _write_corpus(spark: SparkSession, target: str, n_docs: int, avgdl: float) -> None:
+    """Overwrite the singleton corpus-stats table at ``target`` (same
+    fast path)."""
     schema = T.StructType(
         [T.StructField("n_docs", T.LongType()), T.StructField("avgdl", T.DoubleType())]
     )
-    _write_corpus_to(spark, target, n_docs, avgdl, schema)
-
-
-def _write_corpus_to(spark, target: str, n_docs: int, avgdl: float, schema=None) -> None:
-    if schema is None:
-        schema = T.StructType(
-            [T.StructField("n_docs", T.LongType()), T.StructField("avgdl", T.DoubleType())]
-        )
     if _is_local(target):
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -396,7 +388,7 @@ def build_blocks_only(
     idx = InvertedIndex(spark, path, cfg)
     n_docs = int(obs.get["n_docs"])
     avgdl = float(obs.get["sum_dl"]) / float(n_docs) if n_docs else 0.0
-    _write_corpus(spark, path, n_docs, avgdl)
+    _write_corpus(spark, resolve_table_dir(path, "corpus"), n_docs, avgdl)
     dpr = cfg.index.effective_docs_per_range(n_docs)
     cfg_b = (
         replace(cfg, index=replace(cfg.index, docs_per_range=dpr))
@@ -556,13 +548,10 @@ def compact_index(
         live_stats = idx.docstats.join(
             idx.deleted_ids().select("doc_id"), "doc_id", "left_anti"
         )
-        lrow = live_stats.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
-        ).collect()[0]
-        n_live = int(lrow["n"] or 0)
-        avgdl_live = float(lrow["s"] or 0) / float(n_live) if n_live else 0.0
         new_corpus = f"corpus_v{v}"
-        _write_corpus_to(spark, os.path.join(idx.path, new_corpus), n_live, avgdl_live)
+        _write_corpus(
+            spark, os.path.join(idx.path, new_corpus), *bm25.corpus_stats(live_stats)
+        )
         new_ptrs["corpus"] = new_corpus
         extra_retired.append(cur.get("corpus", "corpus"))
         # version the tombstone pointer: the retired dir stays readable
@@ -725,7 +714,7 @@ def build_index(
         n_good = int(obs.get["n_docs"])
         avgdl = float(obs.get["sum_dl"]) / float(n_good) if n_good else 0.0
         mark("docstore_write")
-        _write_corpus(spark, path, n_good, avgdl)
+        _write_corpus(spark, resolve_table_dir(path, "corpus"), n_good, avgdl)
         n_bad = int(obs_bad.get["n_bad"])
         pending_metrics.extend(
             [("events_good", n_good, "documents", time.time()),

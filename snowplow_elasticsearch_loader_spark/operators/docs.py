@@ -181,8 +181,7 @@ def _rowgroup_sample_cuts(files: list[str], num_ranges: int) -> list[str] | None
 
         step = max(1, len(files) // 16)
         vals: list = []
-        for f in files[::step][:16]:
-            path = f[len("file:"):] if f.startswith("file:") else f
+        for path in files[::step][:16]:
             pf = pq.ParquetFile(path)
             for rg in range(min(2, pf.metadata.num_row_groups)):
                 col = pf.read_row_group(rg, columns=["conv_id"]).column(0)
@@ -231,37 +230,15 @@ def _footer_cuts(df: DataFrame, num_ranges: int) -> list[str] | None:
     conv_id min/max stats. Boundary QUALITY only affects load balance,
     never the ranks themselves (bucket identity is value-derived), so
     file-granularity cuts are safe."""
-    try:
-        # inputFiles() on a JOIN returns the other side's files too —
-        # e.g. the streaming cross-batch anti-join probe would hand us
-        # the DOCUMENTS table's footers as cuts for the batch. Only a
-        # bare scan's statistics describe the data being ranked. Walk
-        # the analyzed tree for actual Join NODES (nodeName, never the
-        # pretty-printed string — a column named e.g. joinDate would
-        # false-positive there and silently disable the optimization).
-        stack = [df._jdf.queryExecution().analyzed()]
-        while stack:
-            node = stack.pop()
-            if "Join" in node.nodeName():
-                return None
-            ch = node.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not (1 < len(files) <= 4096) or not all(
-        f.endswith(".parquet") and (f.startswith("file:") or f.startswith("/"))
-        for f in files
-    ):
+    files = _bare_parquet_files(df)
+    if not (files and 1 < len(files) <= 4096):
         return None
     try:
         import pyarrow.parquet as pq
 
         maxes = []
         mins = []
-        for f in files:
-            path = f[len("file:"):] if f.startswith("file:") else f
+        for path in files:
             md = pq.ParquetFile(path).metadata
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
             if "conv_id" not in idx:
@@ -315,19 +292,25 @@ def _footer_cuts(df: DataFrame, num_ranges: int) -> list[str] | None:
     return cuts
 
 
-def footer_row_count(df: DataFrame) -> int | None:
-    """Total row count of a BARE parquet scan from its file footers — a
-    driver-side metadata read, no Spark job. Returns None for derived
-    plans (joins hand back the other side's files too — same guard as
-    ``_footer_cuts``) or non-local/non-parquet sources. Callers use it
-    as an UPPER bound to size ``assign_doc_ids``'s boundary sample
-    (downstream filters only shrink the input; bounds only affect
-    sample sizing and bucket count, never ranks)."""
+def _bare_parquet_files(df: DataFrame) -> list[str] | None:
+    """Local file paths of ``df``'s parquet input when its footers
+    describe it: a bare scan, at most filtered or projected. Returns
+    None for non-local or non-parquet sources and for plans whose rows
+    are not the files' rows. Walks the analyzed tree for the offending
+    NODES (nodeName, never the pretty-printed string — a column named
+    e.g. joinDate would false-positive there and silently disable the
+    footer reads):
+
+    - Join: ``inputFiles()`` returns the other side's files too (e.g.
+      the streaming cross-batch anti-join probe would hand back the
+      DOCUMENTS table's footers for the batch);
+    - Union and Generate: they can emit more rows than the files hold,
+      so a footer total would no longer be an upper bound."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         while stack:
             node = stack.pop()
-            if "Join" in node.nodeName():
+            if any(n in node.nodeName() for n in ("Join", "Union", "Generate")):
                 return None
             ch = node.children()
             for i in range(ch.size()):
@@ -335,19 +318,28 @@ def footer_row_count(df: DataFrame) -> int | None:
         files = df.inputFiles()
     except Exception:
         return None
-    if not files or not all(
+    if not all(
         f.endswith(".parquet") and (f.startswith("file:") or f.startswith("/"))
         for f in files
     ):
         return None
+    return [f[len("file:"):] if f.startswith("file:") else f for f in files]
+
+
+def footer_row_count(df: DataFrame) -> int | None:
+    """Total row count of a bare parquet scan from its file footers — a
+    driver-side metadata read, no Spark job. Returns None where the
+    footers do not bound the rows (``_bare_parquet_files``). Callers
+    use it as an UPPER bound to size ``assign_doc_ids``'s boundary
+    sample (downstream filters only shrink the input; bounds only
+    affect sample sizing and bucket count, never ranks)."""
+    files = _bare_parquet_files(df)
+    if not files:
+        return None
     try:
         import pyarrow.parquet as pq
 
-        total = 0
-        for f in files:
-            path = f[len("file:"):] if f.startswith("file:") else f
-            total += pq.ParquetFile(path).metadata.num_rows
-        return total
+        return sum(pq.ParquetFile(path).metadata.num_rows for path in files)
     except Exception:
         return None
 

@@ -59,14 +59,12 @@ BLOCKS_SCHEMA = T.StructType(
         # partial(max_tf, min_dl) >= max over the block for any avgdl).
         T.StructField("max_tf", T.IntegerType()),
         T.StructField("min_dl", T.IntegerType()),
+        # the posting streams, in the byte format ``functions/codec.py``
+        # owns; positions (token index in the doc's analyzed sequence)
+        # power match_phrase without any corpus rescan
         T.StructField("docs_varint", T.BinaryType()),
         T.StructField("tfs_varint", T.BinaryType()),
         T.StructField("dls_varint", T.BinaryType()),
-        # positional postings: per posting, tf positions (token index in
-        # the doc's analyzed sequence), delta-encoded with a restart at
-        # each posting, varint-packed. The tf stream doubles as the
-        # per-posting position-count directory, so no extra offsets are
-        # stored. Powers match_phrase without any corpus rescan.
         T.StructField("pos_varint", T.BinaryType()),
     ]
 )
@@ -176,8 +174,8 @@ def _emit_blocks(
     pos_full: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """Shared block-emission core: (code, doc)-sorted posting arrays ->
-    compressed block rows. Fully vectorized (reduceat segmentation,
-    whole-column varint encode, boundary slicing).
+    compressed block rows. Fully vectorized: reduceat segmentation and
+    block-max stats here, the byte streams from ``codec.pack_blocks``.
 
     ``pos_full``: optional flat position stream aligned with the input
     rows BEFORE duplicate collapse (each input row carries exactly its
@@ -209,18 +207,6 @@ def _emit_blocks(
     bstart = np.flatnonzero(is_block_start)
     bend = np.concatenate((bstart[1:], [n]))
 
-    # delta-gap with per-block restart, whole-column varint encode,
-    # then slice the byte stream at block boundaries (vectorized)
-    gaps = doc.copy()
-    gaps[1:] -= doc[:-1]
-    gaps[bstart] = doc[bstart]
-    doc_bytes, doc_lens = codec.varint_encode(gaps), _varint_lens(gaps)
-    tf_bytes, tf_lens = codec.varint_encode(tf), _varint_lens(tf)
-    dl_bytes, dl_lens = codec.varint_encode(dl), _varint_lens(dl)
-    doc_off = np.concatenate(([0], np.cumsum(doc_lens)))
-    tf_off = np.concatenate(([0], np.cumsum(tf_lens)))
-    dl_off = np.concatenate(([0], np.cumsum(dl_lens)))
-
     # per-block max partial score: the contribution at weight 1.0
     # (1.0 * x / y is bit-equal to x / y)
     partial = contrib_np(1.0, tf.astype(np.float64), dl.astype(np.float64), avgdl, k1, b)
@@ -228,24 +214,7 @@ def _emit_blocks(
     max_tf_b = np.maximum.reduceat(tf, bstart).astype(np.int64)
     min_dl_b = np.minimum.reduceat(dl, bstart).astype(np.int64)
 
-    # positions stream: delta-gap with a restart at every POSTING
-    # (tf doubles as the per-posting position count at decode time)
-    if pos_full is not None and pos_full.size:
-        cum_tf = np.concatenate(([0], np.cumsum(tf))).astype(np.int64)
-        pf = pos_full.astype(np.uint64)
-        pstart = cum_tf[:-1]
-        pgaps = pf.copy()
-        pgaps[1:] -= pf[:-1]
-        pgaps[pstart] = pf[pstart]
-        pos_bytes, pos_lens = codec.varint_encode(pgaps), _varint_lens(pgaps)
-        pos_off = np.concatenate(([0], np.cumsum(pos_lens)))
-        pos_col = [
-            pos_bytes[pos_off[cum_tf[s]] : pos_off[cum_tf[e]]]
-            for s, e in zip(bstart, bend)
-        ]
-    else:
-        pos_col = [b""] * bstart.size
-
+    docs_b, tfs_b, dls_b, pos_b = codec.pack_blocks(doc, tf, dl, bstart, pos_full)
     return pd.DataFrame(
         {
             "term": uniq_terms[code[bstart]],
@@ -259,16 +228,10 @@ def _emit_blocks(
             "max_score_partial": max_partial,
             "max_tf": max_tf_b.astype(np.int32),
             "min_dl": min_dl_b.astype(np.int32),
-            "docs_varint": [
-                doc_bytes[doc_off[s] : doc_off[e]] for s, e in zip(bstart, bend)
-            ],
-            "tfs_varint": [
-                tf_bytes[tf_off[s] : tf_off[e]] for s, e in zip(bstart, bend)
-            ],
-            "dls_varint": [
-                dl_bytes[dl_off[s] : dl_off[e]] for s, e in zip(bstart, bend)
-            ],
-            "pos_varint": pos_col,
+            "docs_varint": docs_b,
+            "tfs_varint": tfs_b,
+            "dls_varint": dls_b,
+            "pos_varint": pos_b,
         }
     )
 
@@ -394,15 +357,6 @@ def make_range_builder(cfg: EngineConfig, avgdl: float):
     return build_range
 
 
-def _varint_lens(v: np.ndarray) -> np.ndarray:
-    lens = np.ones(v.size, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        lens += tmp > 0
-        tmp >>= np.uint64(7)
-    return lens
-
-
 def build_blocks_df(
     docs: DataFrame,
     avgdl: float,
@@ -460,23 +414,6 @@ def rebuild_blocks_from_postings(
     )
 
 
-def decode_positions(pos_bytes: bytes, tf: np.ndarray) -> list[np.ndarray]:
-    """Inverse of the positions stream: delta-gapped varints with a
-    restart per posting -> one ascending position array per posting
-    (the i-th posting holds tf[i] positions). Empty stream -> empty
-    lists (non-positional index)."""
-    tf = np.asarray(tf).astype(np.int64)
-    if not pos_bytes:
-        return [np.empty(0, dtype=np.int64) for _ in range(tf.size)]
-    gaps = codec.varint_decode(pos_bytes).astype(np.int64)
-    cum = np.concatenate(([0], np.cumsum(tf))).astype(np.int64)
-    starts = cum[:-1]
-    c = np.cumsum(gaps)
-    base = np.repeat(c[starts] - gaps[starts], tf)
-    absolute = c - base
-    return np.split(absolute, cum[1:-1])
-
-
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """Inverse mapping: blocks -> (term, doc_id, tf, doclen, positions)
     postings. The M2 invariant: (term, doc_id, tf, doclen) must equal
@@ -495,54 +432,28 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            # whole-batch decode: varints self-delimit, so every
-            # block's byte stream concatenates into ONE varint_decode
-            # call per column, and the per-block delta restarts are
-            # undone with the same segment-cumsum trick the positions
-            # stream uses — no per-block Python loop (r02's .iat loop
-            # was the slowest decode surface).
             cnt = pdf["doc_count"].to_numpy(np.int64)
-            gaps = codec.varint_decode(
-                b"".join(bytes(x) for x in pdf["docs_varint"])
-            ).astype(np.int64)
-            if gaps.size != int(cnt.sum()):
-                raise ValueError("posting stream length disagrees with doc_count")
-            bstarts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-            c = np.cumsum(gaps)
-            base = np.repeat(c[bstarts] - gaps[bstarts], cnt)
-            doc_id = (c - base).astype(np.int64)
-            tf = codec.varint_decode(
-                b"".join(bytes(x) for x in pdf["tfs_varint"])
-            ).astype(np.int64)
-            dl = codec.varint_decode(
-                b"".join(bytes(x) for x in pdf["dls_varint"])
-            ).astype(np.int32)
-            term = np.repeat(pdf["term"].to_numpy(), cnt)
-            if "pos_varint" in pdf.columns:
-                pos_parts = [
-                    bytes(x) if x is not None else b"" for x in pdf["pos_varint"]
-                ]
-                nonempty = sum(1 for p in pos_parts if p)
-                if nonempty in (0, len(pos_parts)):
-                    # uniform batch: one global decode (restarts are
-                    # per posting, so concatenation preserves them)
-                    poss = decode_positions(b"".join(pos_parts), tf)
-                else:
-                    # mixed positional/non-positional blocks (e.g. a
-                    # compaction reading segments built under different
-                    # configs): per-block decode keeps alignment
-                    tf_splits = np.split(tf, np.cumsum(cnt)[:-1])
-                    poss = []
-                    for p, t in zip(pos_parts, tf_splits):
-                        poss.extend(decode_positions(p, t))
-            else:
-                poss = [np.empty(0, dtype=np.int64)] * gaps.size
+            doc_id, tf, dl = codec.unpack_blocks(
+                cnt, pdf["docs_varint"], pdf["tfs_varint"], pdf["dls_varint"]
+            )
+            pos_parts = [
+                bytes(x) if x is not None else b""
+                for x in pdf.get("pos_varint", [None] * len(pdf))
+            ]
+            # a block without positions (a non-positional index, or a
+            # compaction reading segments built under different
+            # configs) gives its postings zero positions each
+            has_pos = np.repeat([bool(p) for p in pos_parts], cnt)
+            plen = np.where(has_pos, tf, 0)
+            poss = np.split(
+                codec.unpack_positions(b"".join(pos_parts), plen), np.cumsum(plen)[:-1]
+            )
             yield pd.DataFrame(
                 {
-                    "term": term,
+                    "term": np.repeat(pdf["term"].to_numpy(), cnt),
                     "doc_id": doc_id,
                     "tf": tf.astype(np.int32),
-                    "doclen": dl,
+                    "doclen": dl.astype(np.int32),
                     "positions": poss,
                 }
             )

@@ -30,14 +30,14 @@ from pyspark.sql import DataFrame
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
 from ..functions.analyze import tokenize_text
-from .bm25 import contrib_np, doclen_np, idf as idf_fn
-from .index_build import decode_positions
+from .bm25 import contrib_np, idf as idf_fn
 from .wand import (
     _lookup_terms,
     _per_range_topk,
     _range_topk,
     _result_frame,
     _score_docs,
+    _unpack_range,
     empty_search_result,
 )
 
@@ -67,38 +67,23 @@ def make_phrase_evaluator(
     weights and slot offsets are driver-known and ride the closure
     (``queries_spec[qid] = {"m": n_tokens, "terms": {term: (w,
     offsets)}}``), so a range's block rows cross the Arrow boundary once
-    for all queries, with no qterms join, and each block is decoded at
-    most once per range."""
+    for all queries, with no qterms join, and are decoded once for all
+    queries."""
 
     def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         term = pdf["term"]
         _, codes = np.unique(term.to_numpy(), return_inverse=True)
-        decoded: dict[int, tuple] = {}
-
-        def block(i: int) -> tuple:
-            """(doc int64, tf float64, dl float64, positions, doc per position)"""
-            if i not in decoded:
-                d, tf, dl = codec.decode_block(
-                    bytes(pdf["docs_varint"].iat[i]),
-                    bytes(pdf["tfs_varint"].iat[i]),
-                    bytes(pdf["dls_varint"].iat[i]),
-                )
-                pb = pdf["pos_varint"].iat[i]
-                if pb is None or len(pb) == 0:
-                    raise ValueError(
-                        "phrase search requires a positional index "
-                        "(index.store_positions was off at build time)"
-                    )
-                plists = decode_positions(bytes(pb), tf)
-                d = d.astype(np.int64)
-                decoded[i] = (
-                    d,
-                    tf.astype(np.float64),
-                    doclen_np(dl, quantize),
-                    np.concatenate(plists) if plists else np.empty(0, dtype=np.int64),
-                    np.repeat(d, tf.astype(np.int64)),
-                )
-            return decoded[i]
+        pos_parts = [bytes(x) if x is not None else b"" for x in pdf["pos_varint"]]
+        if not all(pos_parts):
+            raise ValueError(
+                "phrase search requires a positional index "
+                "(index.store_positions was off at build time)"
+            )
+        cuts, doc, tf, dl = _unpack_range(pdf, quantize)
+        pos = codec.unpack_positions(b"".join(pos_parts), tf)
+        pcuts = np.cumsum(tf)[cuts - 1]  # position offsets of the block starts
+        docs, tfs, dls = (np.split(a, cuts) for a in (doc, tf.astype(np.float64), dl))
+        poss, pos_docs = (np.split(a, pcuts) for a in (pos, np.repeat(doc, tf)))
 
         qids, out_d, out_s = [], [], []
         for qid in sorted(queries_spec):
@@ -106,11 +91,11 @@ def make_phrase_evaluator(
             rows = np.flatnonzero(term.isin(terms_q).to_numpy())
             slot_keys = []
             for i in rows:
-                _, _, _, p, doc_of_pos = block(i)
+                p = poss[i]
                 for off in terms_q[term.iat[i]][1]:
                     ok = p >= off
                     slot_keys.append(
-                        ((doc_of_pos[ok] << _POS_BITS) | (p[ok] - off)).astype(np.int64)
+                        ((pos_docs[i][ok] << _POS_BITS) | (p[ok] - off)).astype(np.int64)
                     )
             if not slot_keys:
                 continue
@@ -124,8 +109,8 @@ def make_phrase_evaluator(
             d, s = _range_topk(
                 *_score_docs(
                     codes[rows],
-                    [block(i)[0] for i in rows],
-                    lambda j: contrib_np(w[j], *block(rows[j])[1:3], avgdl, k1, b),
+                    [docs[i] for i in rows],
+                    lambda j: contrib_np(w[j], tfs[rows[j]], dls[rows[j]], avgdl, k1, b),
                     matched,
                 ),
                 k,

@@ -31,8 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..functions import codec
 from ..index_store import InvertedIndex
-from .bm25 import analyze_queries, contrib_np, idf as idf_fn
+from .bm25 import analyze_queries, contrib_np, doclen_np, idf as idf_fn
 from .wand import SEARCH_SCHEMA, _exact_scores, empty_search_result, wand_topk
 
 #: most candidate blocks a call may gather to be scored in the driver
@@ -396,31 +397,13 @@ class QueryEngine:
 
     def _decode_frame(self, sub) -> tuple:
         """Decode one term's gathered blocks into (doc int64, tf
-        float64, dl float64-quantized) arrays, fully vectorized: three
-        whole-batch varint decodes (varints self-delimit, so the block
-        streams concatenate) and one segment-cumsum to undo the
-        per-block delta restarts. Runs ONCE per term per cache
+        float64, dl float64-quantized) arrays with one
+        ``codec.unpack_blocks``. Runs ONCE per term per cache
         residency; queries score over the arrays directly."""
-        import numpy as np
-
-        from ..functions import codec
-        from .bm25 import doclen_np
-
-        cnt = sub["doc_count"].to_numpy(np.int64)
-        if cnt.size == 0:
-            z = np.empty(0, np.int64)
-            return z, z.astype(np.float64), z.astype(np.float64)
-        gaps = codec.varint_decode(
-            b"".join(bytes(x) for x in sub["docs_varint"])
-        ).astype(np.int64)
-        bstarts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-        c = np.cumsum(gaps)
-        doc = c - np.repeat(c[bstarts] - gaps[bstarts], cnt)
-        tf = codec.varint_decode(
-            b"".join(bytes(x) for x in sub["tfs_varint"])
-        ).astype(np.float64)
-        dl = codec.varint_decode(b"".join(bytes(x) for x in sub["dls_varint"]))
-        return doc, tf, doclen_np(dl, self.cfg.bm25.quantize_doclen)
+        doc, tf, dl = codec.unpack_blocks(
+            sub["doc_count"], sub["docs_varint"], sub["tfs_varint"], sub["dls_varint"]
+        )
+        return doc, tf.astype(np.float64), doclen_np(dl, self.cfg.bm25.quantize_doclen)
 
     def _exact_topk_decoded(self, qid: str, decs: list[tuple], ws: list[float], k: int):
         """Ranked top-k (doc int64, score rounded to 6 places) of one

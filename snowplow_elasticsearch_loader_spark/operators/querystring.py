@@ -227,11 +227,4 @@ def match_phrase_prefix_counts(
         .select(F.col("_e.query_id").alias("query_id"), "doc_id", F.col("_e.score").alias("score"))
         .filter(F.col("score") > 0)
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bm25.rank(out, k)

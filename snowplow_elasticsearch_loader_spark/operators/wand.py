@@ -18,13 +18,12 @@ surface, ES ``_search`` — it/TestHelpers.scala:157-201):
 
 The pruning phase is the block-max idea vectorized for numpy instead
 of the classic pointer-walking WAND loop (which would be per-row
-Python): decode *doc ids only* (cheap varint), compute every doc's
-score upper bound from per-block avgdl-independent stats
-(``max_tf``, ``min_dl`` — the bound is evaluated with the query-time
-avgdl, so streamed/merged blocks never carry a stale bound) with a
-segment reduce, establish a threshold from exactly-scored
-highest-bound docs, and only then decode tf/doclen payloads for docs
-that can still make top-k. Safety argument: a doc with
+Python): compute every doc's score upper bound from per-block
+avgdl-independent stats (``max_tf``, ``min_dl`` — the bound is
+evaluated with the query-time avgdl, so streamed/merged blocks never
+carry a stale bound) with a segment reduce, establish a threshold from
+exactly-scored highest-bound docs, and only then score the docs that
+can still make top-k. Safety argument: a doc with
 ``ub < t`` satisfies ``score <= ub < t <= kth_best``, so exclusion can
 never change the top-k set or its ranking.
 
@@ -112,8 +111,7 @@ def _score_docs(codes, docs: list, contrib, targets: np.ndarray):
     """Exact (doc, score) of the ``targets`` docs over one query's
     blocks: block ``j`` holds term code ``codes[j]`` and doc ids
     ``docs[j]``, and ``contrib(j)`` gives its per-posting contributions.
-    ``contrib`` runs only for blocks that hold a target, so a block with
-    none never decodes its payload."""
+    ``contrib`` runs only for blocks that hold a target."""
     rows_d, rows_c, rows_t = [], [], []
     for j, d in enumerate(docs):
         mask = np.isin(d, targets)
@@ -147,6 +145,17 @@ def _result_frame(qids: list, docs: list, scores: list) -> pd.DataFrame:
     )
 
 
+def _unpack_range(pdf: pd.DataFrame, quantize: bool) -> tuple:
+    """A range's block rows, decoded in one ``codec.unpack_blocks``:
+    (cuts, doc int64, tf int64, dl float64-quantized), the arrays flat
+    over the range and ``cuts`` the offsets where blocks 1.. start."""
+    cnt = codec.block_sizes(pdf["docs_varint"])
+    doc, tf, dl = codec.unpack_blocks(
+        cnt, pdf["docs_varint"], pdf["tfs_varint"], pdf["dls_varint"]
+    )
+    return np.cumsum(cnt)[:-1], doc, tf, doclen_np(dl, quantize)
+
+
 def make_wand_evaluator(
     queries_w: dict[str, dict[str, float]],
     k: int,
@@ -159,26 +168,17 @@ def make_wand_evaluator(
     ``queries_w[qid]`` maps each query term to its weight (qtf * idf).
     The weights are driver-known and ride the closure, so a range's
     block rows cross the Arrow boundary once for all queries, with no
-    qterms join, and each block's doc ids and payload are decoded at
-    most once per range."""
+    qterms join, and are decoded once for all queries."""
 
     def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         term = pdf["term"]
         _, codes = np.unique(term.to_numpy(), return_inverse=True)
-        docs = [codec.delta_decode(codec.varint_decode(bytes(x))) for x in pdf["docs_varint"]]
+        cuts, doc, tf, dl = _unpack_range(pdf, quantize)
+        docs, tfs, dls = (np.split(a, cuts) for a in (doc, tf.astype(np.float64), dl))
         max_tf = pdf["max_tf"].to_numpy(np.float64)
         # quantization is monotone, so q(min_dl) still lower-bounds
         # every quantized doclen in the block: the bound stays valid
         min_dl = doclen_np(pdf["min_dl"].to_numpy(), quantize)
-        payloads: dict[int, tuple] = {}
-
-        def tf_dl(i: int) -> tuple:
-            if i not in payloads:
-                payloads[i] = (
-                    codec.varint_decode(bytes(pdf["tfs_varint"].iat[i])).astype(np.float64),
-                    doclen_np(codec.varint_decode(bytes(pdf["dls_varint"].iat[i])), quantize),
-                )
-            return payloads[i]
 
         qids, out_d, out_s = [], [], []
         for qid in sorted(queries_w):
@@ -192,7 +192,7 @@ def make_wand_evaluator(
             def score(targets):
                 return _score_docs(
                     codes[rows], qdocs,
-                    lambda j: contrib_np(w[j], *tf_dl(rows[j]), avgdl, k1, b),
+                    lambda j: contrib_np(w[j], tfs[rows[j]], dls[rows[j]], avgdl, k1, b),
                     targets,
                 )
 

@@ -36,9 +36,10 @@ from ..index_store import (
     InvertedIndex,
     _append,
     _done_partitions,
+    _write_corpus,
     resolve_table_dir,
 )
-from ..operators import index_build
+from ..operators import bm25, index_build
 from ..operators.docs import assign_doc_ids, footer_row_count, split_good_bad
 from ..operators.postings import doc_stats
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
@@ -469,12 +470,7 @@ def finalize_streamed_index(
     remain exact-safe bounds under the final avgdl computed here.
     """
     ds = spark.read.parquet(resolve_table_dir(index_dir, "docstats"))
-    row = ds.agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")).collect()[0]
-    from ..index_store import _write_corpus
-
-    _write_corpus(
-        spark, index_dir, int(row["n"]), float(row["s"]) / float(row["n"]) if row["n"] else 0.0
-    )
+    _write_corpus(spark, resolve_table_dir(index_dir, "corpus"), *bm25.corpus_stats(ds))
     blocks = spark.read.parquet(resolve_table_dir(index_dir, "blocks"))
     index_build.termdict_from_blocks(blocks).write.mode("overwrite").parquet(
         resolve_table_dir(index_dir, "termdict")

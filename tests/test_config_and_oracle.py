@@ -37,6 +37,16 @@ def test_config_rejects_unknown_and_invalid():
         EngineConfig.from_dict({"index": {"block_size": 1}}).validate()
 
 
+@pytest.mark.parametrize(
+    "d",
+    [{"index": {"hot_df_threshold": 1}}, {"table_format": "iceberg"}, {"token_pattern": "x"}],
+)
+def test_config_rejects_removed_fields(d):
+    # nothing read these fields, so a config setting them changed nothing
+    with pytest.raises(ValueError, match="unknown config keys"):
+        EngineConfig.from_dict(d)
+
+
 TRICKY = [
     "Hello Wörld ÜÖÄ",
     "my-app-üöä e-mail v2.0",

@@ -12,6 +12,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -303,6 +304,45 @@ def test_positions_roundtrip(spark, idx):
     b = rel.select("term", "doc_id", F.col("positions").cast("array<int>").alias("p"))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_decode_blocks_mixes_positional_and_plain_blocks(spark, idx):
+    """One decode batch that mixes positional and non-positional blocks
+    (segments built under different configs) keeps every posting and
+    gives the plain blocks' postings no positions; the phrase evaluator
+    refuses such blocks loudly."""
+    from snowplow_elasticsearch_loader_spark.operators import index_build
+    from snowplow_elasticsearch_loader_spark.operators.phrase import (
+        PHRASE_INPUT_COLS,
+        make_phrase_evaluator,
+    )
+
+    rows = idx.blocks.filter(F.col("term").isin("the", "tool", "error")).toPandas()
+    rows = rows.sort_values(["term", "block_id"]).reset_index(drop=True)
+    assert len(rows) > 3
+    plain = rows.index % 2 == 1
+    mixed = rows.copy()
+    # a plain block stores either an empty or a null positions stream
+    mixed["pos_varint"] = [
+        (None if i % 4 == 1 else b"") if p else x
+        for i, (p, x) in enumerate(zip(plain, rows["pos_varint"]))
+    ]
+
+    def decode(pdf):
+        schema = index_build.BLOCKS_SCHEMA
+        df = spark.createDataFrame(pdf[schema.fieldNames()], schema=schema).coalesce(1)
+        got = index_build.decode_blocks(df).collect()
+        return [(r["term"], r["doc_id"], r["tf"], r["doclen"], list(r["positions"])) for r in got]
+
+    full, part = decode(rows), decode(mixed)
+    assert [r[:4] for r in part] == [r[:4] for r in full]
+    is_plain = np.repeat(plain, rows["doc_count"].to_numpy())
+    assert all(p[4] == ([] if b else f[4]) for p, f, b in zip(part, full, is_plain))
+    assert all(len(f[4]) == f[2] for f in full)
+
+    ev = make_phrase_evaluator({"q": {"m": 1, "terms": {"the": (1.0, [0])}}}, 10, 1.2, 0.75, 10.0)
+    with pytest.raises(ValueError, match="positional index"):
+        ev((0,), mixed[PHRASE_INPUT_COLS])
 
 
 def test_phrase_topk_index_matches_relational(spark, idx):

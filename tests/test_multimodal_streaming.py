@@ -316,8 +316,8 @@ def test_streamed_block_bounds_safe_under_doclen_skew(spark):
         # 1) every block's stored (max_tf, min_dl) bounds its true max
         #    partial contribution under the FINAL avgdl
         for r in idx.blocks.collect():
-            _, tfs, dls = codec.decode_block(
-                bytes(r["docs_varint"]), bytes(r["tfs_varint"]), bytes(r["dls_varint"])
+            _, tfs, dls = codec.unpack_blocks(
+                [r["doc_count"]], [r["docs_varint"]], [r["tfs_varint"]], [r["dls_varint"]]
             )
             tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
             true_max = ((tfs * (k1 + 1.0)) / (tfs + k1 * ((1 - b) + b * dls / avgdl))).max()

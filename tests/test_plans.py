@@ -135,6 +135,35 @@ def test_footer_cuts_join_detection_is_node_based(spark, tmp_path):
     assert _footer_cuts(joined, 4) is None
 
 
+def test_footer_reads_refuse_plans_that_add_rows(spark, tmp_path):
+    """Footer row counts are used as UPPER bounds on a plan's rows, so
+    a Union or Generate above the scan (which can emit more rows than
+    the files hold) must make them refuse, like a Join; a bare scan
+    keeps its footer count and cuts."""
+    from pyspark.sql import functions as F
+
+    from snowplow_elasticsearch_loader_spark.operators.docs import (
+        _footer_cuts,
+        footer_row_count,
+    )
+
+    p = str(tmp_path / "fr")
+    spark.range(1000).selectExpr(
+        "concat('conv-', lpad(cast(id as string), 8, '0')) as conv_id",
+        "cast(id as int) as turn_idx",
+    ).repartitionByRange(2, "conv_id").write.mode("overwrite").parquet(p)
+    scan = spark.read.parquet(p)
+    assert footer_row_count(scan) == 1000
+    assert footer_row_count(scan.filter("turn_idx < 10")) == 1000
+    assert _footer_cuts(scan, 2)
+    union = scan.union(scan)
+    exploded = scan.select("conv_id", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("x"))
+    assert (union.count(), exploded.count()) == (2000, 3000)
+    for df in (union, exploded):
+        assert footer_row_count(df) is None
+        assert _footer_cuts(df, 2) is None
+
+
 def test_blocks_build_single_exchange_at_range_granularity(spark, tmp_path):
     """The block build's explicit one-task-per-range repartition must be
     reused by the groupBy (ONE Exchange total — the doc-store shuffle)

@@ -19,14 +19,20 @@ def test_varint_roundtrip_property(vals):
     assert np.array_equal(codec.varint_decode(codec.varint_encode(arr)), arr)
 
 
-@given(st.sets(st.integers(min_value=0, max_value=2**50), min_size=1, max_size=1500))
+@given(
+    st.sets(st.integers(min_value=0, max_value=2**63 - 1), min_size=1, max_size=1500),
+    st.integers(min_value=1, max_value=200),
+)
 @settings(max_examples=40, deadline=None)
-def test_delta_block_roundtrip_property(ids_set):
+def test_delta_block_roundtrip_property(ids_set, block_size):
     ids = np.array(sorted(ids_set), dtype=np.uint64)
     tfs = (ids % 37 + 1).astype(np.uint64)
     dls = (ids % 999 + 1).astype(np.uint64)
-    d, t, l = codec.decode_block(*codec.encode_block(ids, tfs, dls))
-    assert np.array_equal(d, ids) and np.array_equal(t, tfs) and np.array_equal(l, dls)
+    bstart = np.arange(0, ids.size, block_size)
+    cnt = np.diff(np.concatenate((bstart, [ids.size])))
+    d, t, l = codec.unpack_blocks(cnt, *codec.pack_blocks(ids, tfs, dls, bstart)[:3])
+    assert np.array_equal(d, ids.astype(np.int64))
+    assert np.array_equal(t, tfs.astype(np.int64)) and np.array_equal(l, dls.astype(np.int64))
 
 
 @given(st.text(max_size=300))
