@@ -70,17 +70,28 @@ class IndexConfig:
     # function of (cfg, n_docs) — never of the session's core count —
     # so the produced index is byte-identical at any parallelism and
     # resume re-derives the same ranges from the persisted corpus size.
+    # The width is floored at ``block_size * term_buckets`` docs (4,096
+    # at the defaults): one range is one task that writes up to
+    # ``term_buckets`` block files, so narrower ranges multiply tiny
+    # files and per-task cost without adding work (a ~7.8k-doc build
+    # wrote 1,024 files before the floor, 64 after). The floor is inert
+    # above ``block_size * term_buckets * min_build_ranges`` docs
+    # (131,072 at the defaults).
     min_build_ranges: int = 32
 
     def effective_docs_per_range(self, n_docs: int) -> int:
         """Range width actually used when building ``n_docs`` docs:
         the configured width, shrunk (never grown) so the build has at
-        least ``min_build_ranges`` one-task ranges, floored at
-        ``block_size`` (the validate() invariant)."""
+        least ``min_build_ranges`` one-task ranges, but never below
+        ``block_size * term_buckets`` docs. Each range is one task that
+        writes up to ``term_buckets`` files, so a range narrower than
+        that floor buys parallelism with files and per-task overhead
+        instead of work; the floor keeps a small build at a few ranges
+        and leaves a large one at ``min_build_ranges``."""
         if self.min_build_ranges <= 1 or n_docs <= 0:
             return self.docs_per_range
         w = -(-n_docs // self.min_build_ranges)  # ceil
-        return max(self.block_size, min(self.docs_per_range, w))
+        return min(self.docs_per_range, max(self.block_size * self.term_buckets, w))
 
 
 @dataclass(frozen=True)

@@ -19,7 +19,9 @@ Layout under ``<path>/``:
     corpus/           singleton (n_docs, avgdl)
     _badrows/         dead-letter (payload_b64, error, stage, ts)
     _checkpoints/     (stage, partition_id, status, turns, postings_emitted,
-                       bytes_merged, terms_finalized, started_ts, finished_ts)
+                       bytes_merged, terms_finalized, started_ts, finished_ts,
+                       snapshot_id); the ``layout`` row's snapshot_id is
+                       the block layout the range rows were built under
     _metrics/         free-form counter rows (name, value, stage, ts)
 
 The metric names (postings_emitted, bytes_merged, terms_finalized) are
@@ -341,30 +343,37 @@ def _write_corpus(spark: SparkSession, target: str, n_docs: int, avgdl: float) -
         ).write.mode("overwrite").parquet(target)
 
 
-def _done_partitions(spark: SparkSession, path: str, stage: str) -> set[int]:
+def _done_checkpoints(spark: SparkSession, path: str, stage: str) -> dict[int, str | None]:
+    """partition_id -> snapshot_id of the ``done`` checkpoint rows of
+    ``stage``."""
     cp = os.path.join(path, "_checkpoints")
+    cols = ["stage", "partition_id", "status", "snapshot_id"]
     if _is_local(cp):
         import glob
 
         import pyarrow.parquet as pq
 
-        out: set[int] = set()
+        out: dict[int, str | None] = {}
         for f in glob.glob(os.path.join(cp, "*.parquet")):
-            t = pq.read_table(f, columns=["stage", "partition_id", "status"]).to_pydict()
+            t = pq.read_table(f, columns=cols).to_pydict()
             out.update(
-                int(p)
-                for s, p, st in zip(t["stage"], t["partition_id"], t["status"])
+                (int(p), snap)
+                for s, p, st, snap in zip(*(t[c] for c in cols))
                 if s == stage and st == "done"
             )
         return out
     try:
         df = spark.read.parquet(cp)
     except Exception:
-        return set()
+        return {}
     rows = df.filter((F.col("stage") == stage) & (F.col("status") == "done")).select(
-        "partition_id"
+        "partition_id", "snapshot_id"
     ).collect()
-    return {int(r["partition_id"]) for r in rows}
+    return {int(r["partition_id"]): r["snapshot_id"] for r in rows}
+
+
+def _done_partitions(spark: SparkSession, path: str, stage: str) -> set[int]:
+    return set(_done_checkpoints(spark, path, stage))
 
 
 def build_blocks_only(
@@ -653,15 +662,10 @@ def build_index(
 
     # ---- resume identity: refuse to resume against a changed input ----
     snap = input_snapshot(transcripts)
-    docs_done = 0 in _done_partitions(spark, path, "documents")
+    docs_cp = _done_checkpoints(spark, path, "documents")
+    docs_done = 0 in docs_cp
     if docs_done:
-        prev = (
-            spark.read.parquet(os.path.join(path, "_checkpoints"))
-            .filter((F.col("stage") == "documents") & (F.col("status") == "done"))
-            .select("snapshot_id")
-            .collect()
-        )
-        prev_snap = prev[0]["snapshot_id"] if prev else None
+        prev_snap = docs_cp[0]
         if (
             prev_snap
             and "inmemory" not in (prev_snap, snap)
@@ -738,7 +742,8 @@ def build_index(
     # on a small corpus it keeps the one-task-per-range stage from
     # quantizing into whole waves (see IndexConfig.min_build_ranges).
     # Resume re-derives the identical width from the persisted corpus
-    # row, so checkpointed range ids stay consistent across runs.
+    # row, so checkpointed range ids stay consistent across runs under
+    # the same config (the layout check below refuses any other).
     dpr = cfg.index.effective_docs_per_range(n_docs)
     cfg_b = (
         replace(cfg, index=replace(cfg.index, docs_per_range=dpr))
@@ -747,6 +752,31 @@ def build_index(
     )
     all_ranges = list(range((max(n_docs - 1, 0) // dpr) + 1))
     done = _done_partitions(spark, path, "range_batch")
+    # ---- resume identity: refuse to resume under a changed layout ----
+    # range r is docs [r*dpr, (r+1)*dpr), so a range checkpointed under
+    # one width is not the same range under another: resuming would
+    # skip docs the done range never covered. The layout row records
+    # what the done ranges mean (a new width rule, a changed
+    # min_build_ranges, block_size or term_buckets all change it).
+    layout = (
+        f"dpr={dpr};block_size={cfg.index.block_size};"
+        f"term_buckets={cfg.index.term_buckets};positions={cfg.index.store_positions}"
+    )
+    prev_layout = _done_checkpoints(spark, path, "layout").get(0)
+    if (done and prev_layout is None) or prev_layout not in (None, layout):
+        raise ValueError(
+            "resume rejected: block layout changed since the checkpointed build "
+            f"({prev_layout or 'unrecorded'} -> {layout}); resume requires the "
+            "original index config, or build into a fresh path"
+        )
+    if prev_layout is None:
+        now = time.time()
+        _append(
+            spark,
+            os.path.join(path, "_checkpoints"),
+            [("layout", 0, "done", 0, 0, 0, 0, now, now, layout)],
+            CHECKPOINT_SCHEMA,
+        )
     todo = [r for r in all_ranges if r not in done]
     if ranges_per_batch is None:
         ranges_per_batch = len(todo) or 1
@@ -842,7 +872,12 @@ def build_index(
         (f"stage_ms:{k}", int(v * 1000), "build_profile", time.time())
         for k, v in stage_sec.items()
     )
-    if pending_metrics:
-        _append(spark, os.path.join(path, "_metrics"), pending_metrics, METRICS_SCHEMA)
+    pending_metrics.extend(
+        [("build_ranges", len(all_ranges), "build_profile", time.time()),
+         ("docs_per_range_effective", dpr, "build_profile", time.time())]
+    )
+    _append(spark, os.path.join(path, "_metrics"), pending_metrics, METRICS_SCHEMA)
     idx.build_stage_sec = {k: round(v, 2) for k, v in stage_sec.items()}
+    idx.build_ranges = len(all_ranges)
+    idx.docs_per_range_effective = dpr
     return idx

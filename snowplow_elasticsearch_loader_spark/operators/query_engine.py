@@ -349,11 +349,14 @@ class QueryEngine:
         The files are read one by one on the calling thread. A pyarrow
         dataset scan over the same files runs on arrow's I/O and CPU
         pools, and its freed read buffers stay resident in those
-        threads' malloc arenas: on a 1k-file bucket set it left the
-        driver ~45 MB larger after the scan, and it was not faster.
-        Its row-group pruning rarely skipped anything: a (bucket, range)
-        file is one row group below parquet's 128 MB row-group size, and
-        its hash-bucketed terms span the bucket's whole sorted range."""
+        threads' malloc arenas: over a 1,024-file block set (32 buckets
+        x 32 ranges, the layout small builds had before the range width
+        was floored at block_size x term_buckets) it left the driver
+        ~45 MB larger after the scan, and it was not faster. Its
+        row-group pruning rarely skips anything: each (bucket, range)
+        file is written by one task, stays far below parquet's 128 MB
+        row-group size (one row group per file), and its hash-bucketed
+        terms span the bucket's whole sorted range."""
         blocks_dir = self.idx._resolve("blocks")
         from ..index_store import _is_local
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +37,7 @@ from ..index_store import (
     InvertedIndex,
     _append,
     _done_partitions,
+    _is_local,
     _write_corpus,
     resolve_table_dir,
 )
@@ -82,31 +84,42 @@ def _scan_state(spark: SparkSession, index_dir: str, exclude_batch: int) -> dict
     """Fallback when no control state exists (legacy dir): aggregate
     docstats, EXCLUDING the current batch's own segment — a crashed
     attempt's partial writes must never shift the replay's offset
-    (they'd assign different doc_ids and orphan the crashed blocks)."""
+    (they'd assign different doc_ids and orphan the crashed blocks).
+
+    Only an ABSENT docstats dir means an empty index. Any other read
+    error raises: a zero state over live documents would restart doc
+    ids at 0 and overwrite them."""
+    empty = {"n_docs": 0, "sum_dl": 0, "next_doc_id": 0}
+    path = resolve_table_dir(index_dir, "docstats")
+    # a local check first: Spark logs a stack trace for a missing path
+    if _is_local(path) and not os.path.isdir(path.removeprefix("file:")):
+        return empty
     try:
-        ds = spark.read.parquet(resolve_table_dir(index_dir, "docstats"))
-        if "batch_seg" in ds.columns:
-            ds = ds.filter(F.col("batch_seg") != int(exclude_batch))
-        row = ds.agg(
-            F.max("doc_id").alias("m"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doclen").alias("s"),
-        ).collect()[0]
-        nxt = int(row["m"]) + 1 if row["m"] is not None else 0
-        # a control-less dir was only ever written by the STREAM path,
-        # whose segments all use cfg's raw width — the committed max
-        # range id is therefore doc-derived (compaction, the one
-        # producer of narrower adaptive ranges, rewrites the control
-        # file with the true value; the batch build path is refused
-        # before this scan ever runs). Derived lazily by the caller,
-        # which knows dpr: max_rid = (next_doc_id - 1) // dpr.
-        return {
-            "n_docs": int(row["n"] or 0),
-            "sum_dl": int(row["s"] or 0),
-            "next_doc_id": nxt,
-        }
-    except Exception:
-        return {"n_docs": 0, "sum_dl": 0, "next_doc_id": 0}
+        ds = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return empty
+    if "batch_seg" in ds.columns:
+        ds = ds.filter(F.col("batch_seg") != int(exclude_batch))
+    row = ds.agg(
+        F.max("doc_id").alias("m"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("doclen").alias("s"),
+    ).collect()[0]
+    nxt = int(row["m"]) + 1 if row["m"] is not None else 0
+    # a control-less dir was only ever written by the STREAM path,
+    # whose segments all use cfg's raw width — the committed max
+    # range id is therefore doc-derived (compaction, the one
+    # producer of narrower adaptive ranges, rewrites the control
+    # file with the true value; the batch build path is refused
+    # before this scan ever runs). Derived lazily by the caller,
+    # which knows dpr: max_rid = (next_doc_id - 1) // dpr.
+    return {
+        "n_docs": int(row["n"] or 0),
+        "sum_dl": int(row["s"] or 0),
+        "next_doc_id": nxt,
+    }
 
 
 def process_stream_batch(

@@ -11,7 +11,11 @@ ceiling from 2 to 8 cores). These tests pin the contract:
   re-derives the same ranges;
 - an adaptive-width index decodes to exactly the relational postings;
 - a streamed append onto an adaptive-width base never collides with a
-  base range id (collision = silent partition overwrite).
+  base range id (collision = silent partition overwrite);
+- the split never goes below ``block_size * term_buckets`` docs per
+  range: one range is one task writing up to ``term_buckets`` files, so
+  a small build stays a few ranges instead of many tiny-file tasks;
+- a checkpointed build refuses to resume under a different layout.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from snowplow_elasticsearch_loader_spark.config import (
@@ -38,14 +43,69 @@ def test_effective_width_pure_function():
     w = ic.effective_docs_per_range(5_762_400)
     assert w == -(-5_762_400 // 32)
     assert (5_762_400 - 1) // w + 1 == 32
-    # tiny corpus: floored at block_size (validate() invariant)
-    assert ic.effective_docs_per_range(500) == 128
+    # tiny corpus: floored at block_size * term_buckets (128 * 32)
+    assert ic.effective_docs_per_range(500) == 4096
+    # the search bench corpus: ~7.8k docs -> 2 ranges, not 32
+    w = ic.effective_docs_per_range(7_773)
+    assert (7_773 - 1) // w + 1 == 2
+    # never wider than the configured width (the contract.py config:
+    # its 64 * 16 floor exceeds docs_per_range)
+    narrow = IndexConfig(block_size=64, docs_per_range=1000, term_buckets=16)
+    for n in (1, 500, 20_000, 10**9):
+        assert narrow.effective_docs_per_range(n) <= 1000
+    assert narrow.effective_docs_per_range(20_000) == 1000
     # knob off -> config width verbatim
     off = IndexConfig(block_size=128, docs_per_range=1 << 20, min_build_ranges=1)
     assert off.effective_docs_per_range(5_762_400) == 1 << 20
     # degenerate corpus sizes
     assert ic.effective_docs_per_range(0) == 1 << 20
-    assert ic.effective_docs_per_range(1) == 128
+    assert ic.effective_docs_per_range(1) == 4096
+
+
+def test_default_build_of_small_corpus_is_one_range(spark):
+    """~2k docs sit below the default 4,096-doc floor: one range, so one
+    block task writing one file per term bucket."""
+    d = tempfile.mkdtemp(prefix="engine-one-range-")
+    try:
+        tr = synth_transcripts(spark, n_convs=60, seed=42, partitions=6)
+        idx = build_index(spark, tr, d, EngineConfig())
+        assert idx.blocks.select("range_id").distinct().count() == 1
+        assert idx.build_ranges == 1
+        assert idx.docs_per_range_effective == 4096
+        metrics = {r["name"]: r["value"] for r in idx.metrics.collect()}
+        assert metrics["build_ranges"] == 1
+        assert metrics["docs_per_range_effective"] == 4096
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_resume_refuses_layout_change(spark):
+    """A build checkpointed under one range width must not resume under
+    another: range 0 of the wider layout covers docs the checkpointed
+    range 0 never built, and a resume would skip them."""
+    def cfg(min_ranges):
+        return EngineConfig(
+            index=IndexConfig(
+                block_size=8, docs_per_range=1 << 20, term_buckets=8,
+                min_build_ranges=min_ranges,
+            )
+        )
+
+    d = tempfile.mkdtemp(prefix="engine-adaptive-layout-")
+    try:
+        tr = synth_transcripts(spark, n_convs=40, seed=11, partitions=4)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            build_index(spark, tr, d, cfg(16), ranges_per_batch=1, fail_after_batches=1)
+        with pytest.raises(ValueError, match="block layout changed"):
+            build_index(spark, tr, d, cfg(4))
+        # the original layout still resumes, to the exact postings
+        idx = build_index(spark, tr, d, cfg(16))
+        decoded = idx.postings().select("term", "doc_id", "tf")
+        relational = build_postings(idx.documents)
+        assert decoded.exceptAll(relational).count() == 0
+        assert relational.exceptAll(decoded).count() == 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_adaptive_build_splits_ranges_and_decodes_exactly(spark):

@@ -137,7 +137,10 @@ def test_resume_after_failure_is_idempotent(spark, idx, index_dir):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
         # checkpoint lineage rows exist with north_star metric names
         names = {r["name"] for r in idx2.metrics.collect()}
-        assert {"postings_emitted", "bytes_merged", "terms_finalized"} <= names
+        assert {
+            "postings_emitted", "bytes_merged", "terms_finalized",
+            "build_ranges", "docs_per_range_effective",
+        } <= names
         stages = {r["stage"] for r in idx2.checkpoints.collect()}
         assert {"documents", "range_batch", "finalize"} <= stages
     finally:

@@ -14,6 +14,7 @@ from snowplow_elasticsearch_loader_spark.operators.postings import build_posting
 from snowplow_elasticsearch_loader_spark.sources.transcripts import synth_transcripts
 from snowplow_elasticsearch_loader_spark.streaming.stream_build import (
     incremental_index_build,
+    process_stream_batch,
     streaming_rollup,
 )
 
@@ -698,3 +699,32 @@ def test_stream_state_matches_docstats_readback(spark):
     finally:
         for d in (in_dir, idx_dir, cp_dir):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_stream_state_scan_raises_on_unreadable_docstats(spark):
+    """Without a control file the next batch's offset comes from a
+    docstats scan. Only an absent docstats dir means an empty index: an
+    unreadable one must fail the batch, not restart doc ids at 0 on top
+    of the live documents."""
+    import glob
+    import os
+
+    idx_dir = tempfile.mkdtemp(prefix="scan-state-idx-")
+    try:
+        tr = synth_transcripts(spark, n_convs=6, seed=5, with_anomalies=False)
+        process_stream_batch(
+            spark, tr.filter(F.col("conv_id") < "conv-00000003"), 0, idx_dir, SCFG
+        )
+        os.remove(os.path.join(idx_dir, "_stream_state.json"))
+        part = sorted(
+            glob.glob(os.path.join(idx_dir, "docstats", "**", "*.parquet"), recursive=True)
+        )[0]
+        with open(part, "wb") as fh:
+            fh.write(b"not a parquet file" * 64)
+        # the parquet reader's own error; its class depends on the backend
+        with pytest.raises(Exception):
+            process_stream_batch(
+                spark, tr.filter(F.col("conv_id") >= "conv-00000003"), 1, idx_dir, SCFG
+            )
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
