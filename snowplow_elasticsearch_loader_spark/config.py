@@ -54,10 +54,6 @@ class IndexConfig:
     # rescan; costs ~30-40% extra block bytes. Lucene stores positions
     # by default for text fields; so do we.
     store_positions: bool = True
-    # analog of reference batching.maxBytes=10MB flush
-    # (core/src/main/resources/reference.conf:28): cap on the pandas
-    # buffer a single SPIMI group may hold before flushing a run.
-    max_run_postings: int = 1 << 22
     # floor on the number of doc ranges a BUILD splits into. At 10^12
     # turns ``docs_per_range`` yields ~10^6 ranges and this knob is
     # inert; on a small corpus the fixed width would yield fewer ranges

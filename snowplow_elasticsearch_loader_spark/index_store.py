@@ -251,12 +251,21 @@ class InvertedIndex:
             docs = docs.join(dels.select("doc_id"), "doc_id", "left_anti")
         return docs
 
-    def postings(self) -> DataFrame:
+    def postings(self, terms: list[str] | None = None) -> DataFrame:
         """Decoded logical postings view (M2 invariant surface), with
         delete-by-query tombstones applied (ES semantics: deleted docs
         leave search results immediately, even though their postings
-        stay physically present until the next merge)."""
-        decoded = index_build.decode_blocks(self.blocks)
+        stay physically present until the next merge).
+
+        ``terms`` restricts the view to those terms' postings. The
+        filter is on the blocks scan, before the decode UDF, which Spark
+        cannot push a predicate through, so only those terms' blocks are
+        read and decoded. It reads blocks, not the termdict: a streamed
+        index's termdict lags its blocks until finalize."""
+        blocks = self.blocks
+        if terms is not None:
+            blocks = blocks.filter(F.col("term").isin(list(terms)))
+        decoded = index_build.decode_blocks(blocks)
         dels = self.deleted_ids()
         if dels is not None:
             decoded = decoded.join(dels.select("doc_id"), "doc_id", "left_anti")
@@ -376,6 +385,13 @@ def _done_partitions(spark: SparkSession, path: str, stage: str) -> set[int]:
     return set(_done_checkpoints(spark, path, stage))
 
 
+def _sized_cfg(cfg: EngineConfig, n_docs: int) -> EngineConfig:
+    """``cfg`` with ``docs_per_range`` set to the width a build of
+    ``n_docs`` docs uses (``IndexConfig.effective_docs_per_range``)."""
+    dpr = cfg.index.effective_docs_per_range(n_docs)
+    return replace(cfg, index=replace(cfg.index, docs_per_range=dpr))
+
+
 def build_blocks_only(
     spark: SparkSession,
     docs: DataFrame,
@@ -398,15 +414,10 @@ def build_blocks_only(
     n_docs = int(obs.get["n_docs"])
     avgdl = float(obs.get["sum_dl"]) / float(n_docs) if n_docs else 0.0
     _write_corpus(spark, resolve_table_dir(path, "corpus"), n_docs, avgdl)
-    dpr = cfg.index.effective_docs_per_range(n_docs)
-    cfg_b = (
-        replace(cfg, index=replace(cfg.index, docs_per_range=dpr))
-        if dpr != cfg.index.docs_per_range
-        else cfg
-    )
+    cfg_b = _sized_cfg(cfg, n_docs)
     index_build.build_blocks_df(
         idx.documents, avgdl, cfg_b,
-        num_ranges=(max(n_docs - 1, 0) // dpr) + 1,
+        num_ranges=(max(n_docs - 1, 0) // cfg_b.index.docs_per_range) + 1,
     ).write.mode("overwrite").partitionBy("term_bucket", "range_id").parquet(
         os.path.join(path, "blocks")
     )
@@ -438,12 +449,7 @@ def delete_by_query(idx: InvertedIndex, terms: list[str]) -> int:
 
     Returns the number of NEWLY deleted docs."""
     spark = idx.spark
-    matched = (
-        idx.postings()
-        .filter(F.col("term").isin(list(terms)))
-        .select("doc_id")
-        .distinct()
-    )
+    matched = idx.postings(terms).select("doc_id").distinct()
     obs = Observation("deletes")
     target = resolve_table_dir(idx.path, "_deletes")
     matched.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
@@ -464,9 +470,15 @@ def compact_index(
     cfg: EngineConfig | None = None,
     gc_grace_sec: float = 300.0,
 ) -> InvertedIndex:
-    """Segment compaction (Lucene merge analog): decode all posting
-    blocks, regroup under the (possibly larger) ``docs_per_range`` of
-    ``cfg``, k-way merge, and swap the blocks + termdict tables.
+    """Segment compaction (Lucene merge analog): rebuild the blocks from
+    the live doc store under the (possibly larger) ``docs_per_range`` of
+    ``cfg``, through the same SPIMI range builder as the batch build,
+    and swap the blocks + termdict tables.
+
+    A streamed index must have every segment committed first: a
+    ``batch_seg`` doc partition without its ``stream_batch`` checkpoint
+    (a micro-batch that crashed after its documents write) raises
+    ``ValueError``; replay that batch, then compact.
 
     The swap is rename-free (object-store/HDFS-safe): new blocks AND the
     termdict built FOR THEM are written to fresh versioned dirs
@@ -484,8 +496,8 @@ def compact_index(
 
     When the index carries delete-by-query tombstones, compaction is
     also the merge that EXPUNGES them (Lucene semantics): the rebuilt
-    blocks/termdict contain only live postings (``idx.postings()`` is
-    already tombstone-filtered), the doc store (and streamed docstats)
+    blocks/termdict contain only live postings (they are built from
+    ``idx.live_documents()``), the doc store (and streamed docstats)
     are rewritten live-only into versioned dirs, corpus stats are
     restated over the live docs, and the tombstone dir itself is
     retired — all behind the same single manifest flip, so a crash at
@@ -495,6 +507,15 @@ def compact_index(
     spark = idx.spark
     ensure_shipped(spark)
     t0 = time.time()
+    docs = idx.documents
+    if "batch_seg" in docs.columns:
+        segs = {int(r[0]) for r in docs.select("batch_seg").distinct().collect()}
+        pending = sorted(segs - _done_partitions(spark, idx.path, "stream_batch"))
+        if pending:
+            raise ValueError(
+                f"compaction refused: stream batch(es) {pending} wrote documents "
+                "but have no stream_batch checkpoint; replay that batch, then compact"
+            )
     n_docs_c, avgdl = idx.corpus()
     man_path = os.path.join(idx.path, "_manifest.json")
     cur = {"blocks": "blocks", "termdict": "termdict", "version": 0}
@@ -504,18 +525,13 @@ def compact_index(
     v = int(cur.get("version", 0)) + 1
     new_blocks, new_td = f"blocks_v{v}", f"termdict_v{v}"
     expunging = idx.has_tombstones()
-    decoded = idx.postings()  # tombstone-filtered: the merge drops deletes
     # same adaptive width as the batch build: a compacted small corpus
     # regains one-task-per-range parallelism instead of collapsing to
     # a handful of tasks under the fixed 10^12-scale width
-    cfg_c = replace(
-        cfg,
-        index=replace(
-            cfg.index,
-            docs_per_range=cfg.index.effective_docs_per_range(n_docs_c),
-        ),
-    )
-    index_build.rebuild_blocks_from_postings(decoded, avgdl, cfg_c).write.mode(
+    cfg_c = _sized_cfg(cfg, n_docs_c)
+    # tombstone-filtered docs: the merge drops deletes. No num_ranges:
+    # streamed doc ids are sparse (each batch starts at a range boundary)
+    index_build.build_blocks_df(idx.live_documents(), avgdl, cfg_c).write.mode(
         "overwrite"
     ).partitionBy("term_bucket", "range_id").parquet(os.path.join(idx.path, new_blocks))
     staged = spark.read.parquet(os.path.join(idx.path, new_blocks))
@@ -567,6 +583,27 @@ def compact_index(
         # through the grace window; NEW deletes go to the fresh pointer
         new_ptrs["_deletes"] = f"_deletes_v{v}"
         extra_retired.append(cur.get("_deletes", "_deletes"))
+    # streamed indexes track the committed max range id in the control
+    # file (the next micro-batch's collision guard: its segment's range
+    # ids must start above every live one). The new blocks may be split
+    # under a narrower adaptive width, so raise the guard to cover them
+    # BEFORE the flip. A guard higher than needed only leaves a doc-id
+    # gap; a stale lower one would let the next batch's dynamic
+    # overwrite replace live compacted ranges, so errors propagate.
+    state_file = os.path.join(idx.path, "_stream_state.json")
+    if os.path.exists(state_file):
+        from .streaming.stream_build import _write_state
+
+        new_max = staged.agg(F.max("range_id")).collect()[0][0]
+        with open(state_file) as fh:
+            st = json.load(fh)
+        for side in ("before", "after"):
+            if side in st:
+                st[side]["max_rid"] = max(
+                    int(st[side].get("max_rid", -1)),
+                    -1 if new_max is None else int(new_max),
+                )
+        _write_state(idx.path, st)
     # pointer flip: single-file replace — the local-FS analog of an
     # atomic object PUT; no directory rename anywhere in the commit path
     now = time.time()
@@ -593,27 +630,6 @@ def compact_index(
             if name:
                 shutil.rmtree(os.path.join(idx.path, name), ignore_errors=True)
     out = InvertedIndex(spark, idx.path, cfg)
-    # streamed indexes track the committed max range id in the control
-    # file (the next micro-batch's collision guard — its segment's
-    # range ids must start above every live one). Compaction re-split
-    # the blocks under the adaptive width, so restate it from the new
-    # blocks table before any further batch reads the stale value.
-    state_file = os.path.join(idx.path, "_stream_state.json")
-    if os.path.exists(state_file):
-        try:
-            row = staged.agg(F.max("range_id").alias("m")).collect()[0]
-            new_max = int(row["m"]) if row["m"] is not None else -1
-            with open(state_file) as fh:
-                st = json.load(fh)
-            for side in ("before", "after"):
-                if side in st:
-                    st[side]["max_rid"] = new_max
-            tmp_s = state_file + ".tmp"
-            with open(tmp_s, "w") as fh:
-                json.dump(st, fh)
-            os.replace(tmp_s, state_file)
-        except Exception:
-            pass
     _append(
         spark,
         os.path.join(idx.path, "_checkpoints"),
@@ -744,12 +760,8 @@ def build_index(
     # Resume re-derives the identical width from the persisted corpus
     # row, so checkpointed range ids stay consistent across runs under
     # the same config (the layout check below refuses any other).
-    dpr = cfg.index.effective_docs_per_range(n_docs)
-    cfg_b = (
-        replace(cfg, index=replace(cfg.index, docs_per_range=dpr))
-        if dpr != cfg.index.docs_per_range
-        else cfg
-    )
+    cfg_b = _sized_cfg(cfg, n_docs)
+    dpr = cfg_b.index.docs_per_range
     all_ranges = list(range((max(n_docs - 1, 0) // dpr) + 1))
     done = _done_partitions(spark, path, "range_batch")
     # ---- resume identity: refuse to resume under a changed layout ----

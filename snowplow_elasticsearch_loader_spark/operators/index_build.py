@@ -7,8 +7,8 @@ Reference parity map:
   becomes ``applyInPandas`` groups emitting compressed block rows, then
   a partitioned parquet/Iceberg write;
 - the 10MB/1s batch-up flush (core/Processing.scala:80,274-298) becomes
-  the SPIMI run cap ``max_run_postings`` — a group's postings are
-  sorted in memory-bounded runs, then k-way merged;
+  the range width (``IndexConfig.effective_docs_per_range``): a group
+  holds one doc range, tokenized and sorted in memory in one pass;
 - date-sharded index routing (core/Processing.scala:162-171) becomes
   the on-disk partition columns ``(term_bucket, range_id)`` that the
   query side prunes on.
@@ -16,7 +16,7 @@ Reference parity map:
 Skew strategy (north_rule: "partitioning / shuffle / skew handled
 explicitly"): every posting gets ``range_id = doc_id // docs_per_range``
 — a Lucene-segment-style doc-range split. The build group key is
-``(term_bucket, range_id)``, so a hot term occurring in 50% of all
+``range_id``, so a hot term occurring in 50% of all
 docs contributes at most ``docs_per_range`` postings to any one group:
 group size is bounded by construction, independently of term skew, and
 — because the key derives from doc_id, not from partition placement —
@@ -27,6 +27,11 @@ A term's global posting order is recovered without any further shuffle:
 ranges are disjoint, ordered doc-id intervals, so
 ``block_id = range_id * max_blocks_per_range + local_block`` is
 monotone in doc_id across the whole term.
+
+There is one block builder (``make_range_builder``), and it reads the
+doc store's text: the batch build, ``build_blocks_only``, every stream
+micro-batch and segment compaction (``compact_index``, which rebuilds
+from the live documents) all write blocks through it.
 """
 
 from __future__ import annotations
@@ -39,7 +44,6 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
-from ..functions.analyze import tokens_col
 from .bm25 import contrib_np
 
 BLOCKS_SCHEMA = T.StructType(
@@ -70,135 +74,36 @@ BLOCKS_SCHEMA = T.StructType(
 )
 
 
-def term_bucket_col(term, buckets: int):
-    """Deterministic on-disk bucket for a term (query-side pruning)."""
-    c = F.col(term) if isinstance(term, str) else term
-    return F.pmod(F.crc32(c.cast("binary")), F.lit(buckets)).cast("int")
-
-
-def postings_with_doclen(docs: DataFrame) -> DataFrame:
-    """(term, doc_id, tf, doclen) in ONE shuffle: doclen rides along the
-    explode so no big-big join against docstats is needed. A stored
-    doclen column (from the staged doc store) is reused instead of
-    re-counting tokens."""
-    if "doclen" in docs.columns:
-        tok = docs.select("doc_id", "doclen", tokens_col("text").alias("tokens"))
-    else:
-        tok = docs.select(
-            "doc_id", tokens_col("text").alias("tokens")
-        ).withColumn("doclen", F.size("tokens"))
-    return (
-        tok.select("doc_id", "doclen", F.explode("tokens").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"), F.first("doclen").alias("doclen"))
-    )
-
-
-def _term_codes(terms: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(codes, sorted_unique_terms): integer term codes whose numeric
-    order IS lexicographic term order.
-
-    The SPIMI sort used to lexsort the full object-string term column —
-    the single hottest Python cost in the build (string comparisons for
-    millions of postings). Factorizing first (O(n) hash) and string-
-    sorting only the UNIQUE terms (vocab-sized, thousands not millions)
-    makes every subsequent sort a pure int lexsort, while keeping the
-    output byte-identical to the string-sorted original at any
-    parallelism level (codes are rank-remapped to sorted order)."""
-    raw, uniques = pd.factorize(terms, sort=False)
-    uniques = np.asarray(uniques, dtype=object)
-    order_u = np.argsort(uniques)
-    rank = np.empty(order_u.size, dtype=np.int64)
-    rank[order_u] = np.arange(order_u.size)
-    return rank[raw], uniques[order_u]
-
-
-def _sort_runs(
-    code: np.ndarray,
-    doc: np.ndarray,
-    tf: np.ndarray,
-    dl: np.ndarray,
-    cap: int,
-    extra: dict[str, np.ndarray] | None = None,
-) -> list[dict[str, np.ndarray]]:
-    """SPIMI phase 1: memory-capped sorted runs (flush analog of the
-    reference's maxBytes batch-up, core/Processing.scala:274-298).
-    ``extra`` columns (e.g. token position) ride along; when a ``pos``
-    column is present it participates in the sort so positions stay
-    ascending within each (term, doc) posting."""
-    extra = extra or {}
-    runs = []
-    for start in range(0, len(code), cap):
-        sl = slice(start, start + cap)
-        keys = (doc[sl], code[sl]) if "pos" not in extra else (
-            extra["pos"][sl], doc[sl], code[sl]
-        )
-        order = np.lexsort(keys)
-        run = {
-            "code": code[sl][order],
-            "doc_id": doc[sl][order],
-            "tf": tf[sl][order],
-            "doclen": dl[sl][order],
-        }
-        for k, v in extra.items():
-            run[k] = v[sl][order]
-        runs.append(run)
-    return runs
-
-
-def _merge_runs(runs: list[dict[str, np.ndarray]]) -> dict[str, np.ndarray]:
-    """SPIMI phase 2: k-way merge of sorted runs (vectorized: the merge
-    of k sorted runs is realized as one lexsort over their
-    concatenation — same output order as a heap merge, no per-row
-    Python)."""
-    if len(runs) == 1:
-        return runs[0]
-    cat = {k: np.concatenate([r[k] for r in runs]) for k in runs[0]}
-    keys = (cat["doc_id"], cat["code"]) if "pos" not in cat else (
-        cat["pos"], cat["doc_id"], cat["code"]
-    )
-    order = np.lexsort(keys)
-    return {k: v[order] for k, v in cat.items()}
-
-
 def _emit_blocks(
     code: np.ndarray,
     doc: np.ndarray,
-    tf: np.ndarray,
     dl: np.ndarray,
+    pos: np.ndarray | None,
     uniq_terms: np.ndarray,
-    bucket_by_code: np.ndarray,
     range_id: int,
     cfg: EngineConfig,
     avgdl: float,
-    pos_full: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Shared block-emission core: (code, doc)-sorted posting arrays ->
+    """Block-emission core: token occurrences sorted by (code, doc) ->
     compressed block rows. Fully vectorized: reduceat segmentation and
     block-max stats here, the byte streams from ``codec.pack_blocks``.
 
-    ``pos_full``: optional flat position stream aligned with the input
-    rows BEFORE duplicate collapse (each input row carries exactly its
-    share of positions in ascending order, so after collapse the i-th
-    posting's positions are pos_full[cum_tf[i] : cum_tf[i+1]])."""
+    ``pos``: optional position of each occurrence, ascending within
+    each (term, doc) run, so after the collapse into postings the i-th
+    posting's positions are pos[cum_tf[i] : cum_tf[i+1]]."""
     k1, b = cfg.bm25.k1, cfg.bm25.b
     block_size = cfg.index.block_size
     max_blocks_per_range = cfg.index.docs_per_range  # safe upper bound
-    doc = doc.astype(np.uint64)
-    tf = tf.astype(np.uint64)
-    dl = dl.astype(np.uint64)
+    # each (term, doc) run of occurrences -> one posting, tf = run length
+    starts = np.flatnonzero(
+        (np.diff(code, prepend=-1) != 0) | (np.diff(doc, prepend=-1) != 0)
+    )
+    tf = np.diff(np.append(starts, code.size)).astype(np.uint64)
+    code, doc, dl = code[starts], doc[starts].astype(np.uint64), dl[starts].astype(np.uint64)
     n = len(code)
-    # collapse duplicate (term, doc) runs -> summed tf
-    if n > 1:
-        same = (code[1:] == code[:-1]) & (doc[1:] == doc[:-1])
-        if same.any():
-            starts = np.flatnonzero(np.concatenate(([True], ~same)))
-            tf = np.add.reduceat(tf, starts)
-            code, doc, dl = code[starts], doc[starts], dl[starts]
-            n = len(code)
 
     # per-term segmentation (sorted, so boundaries are != shifts)
-    new_term = np.concatenate(([True], code[1:] != code[:-1]))
+    new_term = np.diff(code, prepend=-1) != 0
     term_start = np.flatnonzero(new_term)
     seg_len = np.diff(np.concatenate((term_start, [n])))
     rank_in_term = np.arange(n) - np.repeat(term_start, seg_len)
@@ -214,7 +119,8 @@ def _emit_blocks(
     max_tf_b = np.maximum.reduceat(tf, bstart).astype(np.int64)
     min_dl_b = np.minimum.reduceat(dl, bstart).astype(np.int64)
 
-    docs_b, tfs_b, dls_b, pos_b = codec.pack_blocks(doc, tf, dl, bstart, pos_full)
+    docs_b, tfs_b, dls_b, pos_b = codec.pack_blocks(doc, tf, dl, bstart, pos)
+    bucket_by_code = _crc_buckets(uniq_terms, cfg.index.term_buckets)
     return pd.DataFrame(
         {
             "term": uniq_terms[code[bstart]],
@@ -240,56 +146,12 @@ def _crc_buckets(uniq_terms: np.ndarray, buckets: int) -> np.ndarray:
     """term_bucket per unique term — zlib.crc32 over UTF-8 bytes, the
     exact value Spark's crc32(cast(term AS binary)) computes, so blocks
     built python-side land in the same partitions the JVM query side
-    prunes on (term_bucket_col)."""
+    prunes on."""
     import zlib
 
     return np.array(
         [zlib.crc32(t.encode("utf-8")) % buckets for t in uniq_terms], dtype=np.int64
     )
-
-
-def make_block_builder(cfg: EngineConfig, avgdl: float):
-    """(term_bucket, range_id)-grouped posting rows -> block rows (the
-    compaction/rebuild path, where input is already aggregated postings,
-    optionally with a ``positions`` list column to preserve)."""
-
-    def build_blocks(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..session import ensure_worker_arena
-
-        ensure_worker_arena()  # once per worker: batch the heap faults
-        term_bucket, range_id = int(key[0]), int(key[1])
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in BLOCKS_SCHEMA.fields])
-        if "tf" in pdf.columns:
-            tf_in = pdf["tf"].to_numpy(np.int64)
-        else:
-            tf_in = np.ones(len(pdf), dtype=np.int64)
-        code_in, uniq_terms = _term_codes(pdf["term"].to_numpy())
-        has_pos = cfg.index.store_positions and "positions" in pdf.columns
-        extra = {"plist": pdf["positions"].to_numpy()} if has_pos else None
-        merged = _merge_runs(
-            _sort_runs(
-                code_in,
-                pdf["doc_id"].to_numpy(np.int64),
-                tf_in,
-                pdf["doclen"].to_numpy(np.int64),
-                cfg.index.max_run_postings,
-                extra=extra,
-            )
-        )
-        pos_full = None
-        if has_pos:
-            lists = [np.asarray(x, dtype=np.int64) for x in merged["plist"]]
-            pos_full = np.concatenate(lists) if lists else np.empty(0, dtype=np.int64)
-            if pos_full.size and pos_full.size != int(merged["tf"].sum()):
-                raise ValueError("positions/tf mismatch in rebuild input")
-        bucket_by_code = np.full(len(uniq_terms), term_bucket, dtype=np.int64)
-        return _emit_blocks(
-            merged["code"], merged["doc_id"], merged["tf"], merged["doclen"],
-            uniq_terms, bucket_by_code, range_id, cfg, avgdl, pos_full=pos_full,
-        )
-
-    return build_blocks
 
 
 def make_range_builder(cfg: EngineConfig, avgdl: float):
@@ -307,9 +169,10 @@ def make_range_builder(cfg: EngineConfig, avgdl: float):
     - term codes factorized, string-sorting only the range's vocab;
     - term_bucket from zlib.crc32 == JVM crc32 (query-side pruning).
 
-    Group size is bounded by construction: docs_per_range docs, so a
-    hot term never concentrates work, and memory is capped by the
-    range width regardless of corpus size.
+    Group size is bounded by construction: one range holds at most
+    ``docs_per_range`` docs (the effective width the caller passes in
+    ``cfg``), so a hot term never concentrates work, and memory is
+    capped by the range width regardless of corpus size.
     """
     from ..functions.analyze import tokenize_arrow
 
@@ -318,11 +181,14 @@ def make_range_builder(cfg: EngineConfig, avgdl: float):
 
         ensure_worker_arena()  # once per worker: batch the heap faults
         range_id = int(key[0])
+        empty = pd.DataFrame(columns=[f.name for f in BLOCKS_SCHEMA.fields])
         if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in BLOCKS_SCHEMA.fields])
+            return empty
         # Arrow C++ tokenize: flat token array + owning-row index, no
         # per-token Python objects (input_hint "no per-row Python")
         row_of, tokens = tokenize_arrow(pdf["text"])
+        if row_of.size == 0:  # every doc of the range is tokenless
+            return empty
         lens = np.bincount(row_of, minlength=len(pdf)).astype(np.int64)
         doc = pdf["doc_id"].to_numpy(np.int64)[row_of]
         dl = lens[row_of]
@@ -340,18 +206,13 @@ def make_range_builder(cfg: EngineConfig, avgdl: float):
         rank[order_u] = np.arange(order_u.size)
         code_in = rank[codes_raw]
         uniq_terms = vocab[order_u]
-        extra = {"pos": pos} if cfg.index.store_positions else None
-        merged = _merge_runs(
-            _sort_runs(
-                code_in, doc, np.ones(doc.size, dtype=np.int64), dl,
-                cfg.index.max_run_postings, extra=extra,
-            )
-        )
-        bucket_by_code = _crc_buckets(uniq_terms, cfg.index.term_buckets)
+        # one sort of the whole group into (term, doc[, position])
+        # order; lexsort's last key is the primary one
+        positions = cfg.index.store_positions
+        order = np.lexsort((pos, doc, code_in) if positions else (doc, code_in))
         return _emit_blocks(
-            merged["code"], merged["doc_id"], merged["tf"], merged["doclen"],
-            uniq_terms, bucket_by_code, range_id, cfg, avgdl,
-            pos_full=merged.get("pos"),
+            code_in[order], doc[order], dl[order], pos[order] if positions else None,
+            uniq_terms, range_id, cfg, avgdl,
         )
 
     return build_range
@@ -396,24 +257,6 @@ def build_blocks_df(
     )
 
 
-def rebuild_blocks_from_postings(
-    postings: DataFrame, avgdl: float, cfg: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """(term, doc_id, tf, doclen) -> compressed blocks under cfg's
-    layout. Used by segment compaction: decoded postings of many small
-    doc ranges (streamed micro-batch segments) are re-grouped under a
-    larger ``docs_per_range`` and k-way merged back into full blocks —
-    the Lucene segment-merge analog."""
-    keyed = postings.withColumn(
-        "term_bucket", term_bucket_col("term", cfg.index.term_buckets)
-    ).withColumn(
-        "range_id", (F.col("doc_id") / F.lit(cfg.index.docs_per_range)).cast("long")
-    )
-    return keyed.groupBy("term_bucket", "range_id").applyInPandas(
-        make_block_builder(cfg, avgdl), schema=BLOCKS_SCHEMA
-    )
-
-
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """Inverse mapping: blocks -> (term, doc_id, tf, doclen, positions)
     postings. The M2 invariant: (term, doc_id, tf, doclen) must equal
@@ -440,9 +283,9 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
                 bytes(x) if x is not None else b""
                 for x in pdf.get("pos_varint", [None] * len(pdf))
             ]
-            # a block without positions (a non-positional index, or a
-            # compaction reading segments built under different
-            # configs) gives its postings zero positions each
+            # a block without positions (a non-positional index, or an
+            # index whose segments were built under different configs)
+            # gives its postings zero positions each
             has_pos = np.repeat([bool(p) for p in pos_parts], cnt)
             plen = np.where(has_pos, tf, 0)
             poss = np.split(

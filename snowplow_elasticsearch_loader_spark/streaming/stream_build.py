@@ -18,7 +18,10 @@ refresh:
 
 Micro-batch appends reuse the SAME block builder as the batch path, so
 streamed and batch-built indexes decode to identical postings when fed
-identical doc-id assignments (asserted in tests).
+identical doc-id assignments (asserted in tests). Compacting a streamed
+index (``compact_index``) rebuilds its blocks from the committed doc
+store through that builder too, so it gives the same blocks as
+``build_blocks_only`` over the live documents under the same config.
 """
 
 from __future__ import annotations
@@ -220,7 +223,7 @@ def process_stream_batch(
     # offset//dpr — and this batch's dynamic overwrite would silently
     # REPLACE those live partitions. Start streamed ranges strictly
     # above the committed max range id. The guard rides the control
-    # state (compaction rewrites it after a flip); a control-less dir
+    # state (compaction raises it before its flip); a control-less dir
     # is stream-only-at-raw-width, where (nxt-1)//dpr is exact. Never
     # probed from the blocks dir itself: a crashed attempt's partial
     # block writes would shift the replay's offset and break replay
@@ -350,12 +353,7 @@ def update_by_query(
     segments; ``process_stream_batch`` refuses batch-built dirs with an
     actionable error. Returns the number of docs updated."""
     idx = InvertedIndex(spark, index_dir, cfg)
-    ids = (
-        idx.postings()
-        .filter(F.col("term").isin(list(terms)))
-        .select("doc_id")
-        .distinct()
-    )
+    ids = idx.postings(terms).select("doc_id").distinct()
     rows = idx.live_documents().join(ids, "doc_id")
     missing = {"conv_id", "turn_idx", "text"} - set(rows.columns)
     if missing:

@@ -39,10 +39,15 @@ def test_config_rejects_unknown_and_invalid():
 
 @pytest.mark.parametrize(
     "d",
-    [{"index": {"hot_df_threshold": 1}}, {"table_format": "iceberg"}, {"token_pattern": "x"}],
+    [
+        {"index": {"hot_df_threshold": 1}},
+        {"table_format": "iceberg"},
+        {"token_pattern": "x"},
+        {"index": {"max_run_postings": 1}},
+    ],
 )
 def test_config_rejects_removed_fields(d):
-    # nothing read these fields, so a config setting them changed nothing
+    # removed fields: a config that sets one is refused, not ignored
     with pytest.raises(ValueError, match="unknown config keys"):
         EngineConfig.from_dict(d)
 

@@ -29,7 +29,7 @@ from snowplow_elasticsearch_loader_spark.operators.postings import (
 from snowplow_elasticsearch_loader_spark.sources.transcripts import synth_transcripts
 
 CFG = EngineConfig(
-    index=IndexConfig(block_size=8, docs_per_range=256, term_buckets=8, max_run_postings=500),
+    index=IndexConfig(block_size=8, docs_per_range=256, term_buckets=8),
     limits=LimitsConfig(max_text_bytes=50_000, max_tokens_per_turn=5_000),
 )
 
@@ -574,3 +574,44 @@ def test_assign_doc_ids_zero_row_bound_still_assigns_ids(spark):
     )
     ids = [r["doc_id"] for r in assign_doc_ids(tr, n_rows=0).select("doc_id").collect()]
     assert sorted(ids) == [0, 1, 2]
+
+
+def test_one_block_builder():
+    """Every blocks table is written by one builder: the package has
+    exactly one ``applyInPandas(..., schema=BLOCKS_SCHEMA)``, so a
+    second SPIMI builder (e.g. one fed by decoded postings) cannot come
+    back beside ``index_build.make_range_builder``."""
+    import ast
+    import pathlib
+
+    import snowplow_elasticsearch_loader_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    builders = []
+    for p in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "applyInPandas"
+                and any(
+                    getattr(a, "id", None) == "BLOCKS_SCHEMA"
+                    or getattr(a, "attr", None) == "BLOCKS_SCHEMA"
+                    for a in [*node.args, *(k.value for k in node.keywords)]
+                )
+            ):
+                builders.append(f"{p.relative_to(root)}:{node.lineno}")
+    assert len(builders) == 1, builders
+
+
+def test_range_of_tokenless_docs_builds_no_blocks():
+    """A doc range whose docs all lack a token (empty or punctuation-
+    only text) yields no block rows instead of failing the build."""
+    import pandas as pd
+
+    from snowplow_elasticsearch_loader_spark.operators.index_build import make_range_builder
+
+    build = make_range_builder(CFG, avgdl=3.0)
+    out = build((0,), pd.DataFrame({"doc_id": [4, 5], "text": ["", " !? "]}))
+    assert len(out) == 0
+    out = build((0,), pd.DataFrame({"doc_id": [4, 5, 6], "text": ["", "b a b", "a"]}))
+    assert out[["term", "doc_count", "max_tf"]].values.tolist() == [["a", 2, 1], ["b", 1, 2]]

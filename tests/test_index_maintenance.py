@@ -173,3 +173,62 @@ def test_update_by_query_versions_and_upsert(spark, sf_tiny, tmp_path_factory):
     process_stream_batch(spark, tr, 99, idx_dir, cfg)
     assert idx.live_documents().count() == n_before
     assert idx.live_documents().select("conv_id", "turn_idx").distinct().count() == n_before
+
+
+def test_delete_and_update_decode_only_the_queried_terms(spark, tmp_path, monkeypatch):
+    """delete_by_query and update_by_query match through
+    ``postings(terms)``: the term predicate sits on the blocks scan that
+    feeds the decode UDF, so only the queried terms' blocks are read and
+    decoded. The match reads blocks, not the termdict, so a term that
+    occurs only in an unfinalized stream batch is still found."""
+    from snowplow_elasticsearch_loader_spark.sources.transcripts import synth_transcripts
+    from snowplow_elasticsearch_loader_spark.streaming.stream_build import (
+        finalize_streamed_index,
+        process_stream_batch,
+        update_by_query,
+    )
+
+    decoded_inputs = []
+    real_decode = index_build.decode_blocks
+
+    def recording_decode(blocks):
+        decoded_inputs.append(blocks)
+        return real_decode(blocks)
+
+    def scan_filters(df):
+        """The plan's blocks scans (not the tombstone scan)."""
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [ln for ln in plan.splitlines() if "FileScan parquet" in ln and "docs_varint" in ln]
+
+    cfg = EngineConfig(index=IndexConfig(block_size=16, docs_per_range=256, term_buckets=8))
+    d = str(tmp_path / "idx")
+    tr = synth_transcripts(spark, n_convs=8, seed=3, with_anomalies=False)
+    process_stream_batch(spark, tr.filter(F.col("conv_id") < "conv-00000004"), 0, d, cfg)
+    finalize_streamed_index(spark, d, cfg)
+    late = tr.filter(F.col("conv_id") >= "conv-00000004").withColumn(
+        "text",
+        F.when(F.col("turn_idx") == 0, F.concat("text", F.lit(" latezz"))).otherwise(
+            F.col("text")
+        ),
+    )
+    process_stream_batch(spark, late, 1, d, cfg)  # not finalized
+    idx = InvertedIndex(spark, d, cfg)
+    assert not idx.lookup_terms(["latezz"])  # the termdict lags the blocks
+    victims = _matching_ids(idx.documents, "latezz")
+    assert victims
+
+    monkeypatch.setattr(index_build, "decode_blocks", recording_decode)
+    assert delete_by_query(idx, ["latezz"]) == len(victims)
+    fetched = {r["doc_id"] for r in idx.live_documents().select("doc_id").collect()}
+    assert fetched.isdisjoint(victims)
+    n_upd = update_by_query(spark, d, ["tool"], lambda c: F.concat(c, F.lit(" upd")), cfg)
+    assert n_upd > 0
+
+    assert len(decoded_inputs) == 2
+    for df, term in zip(decoded_inputs, ["latezz", "tool"]):
+        scans = scan_filters(df)
+        assert len(scans) == 1, scans
+        assert "PushedFilters: []" not in scans[0]
+        assert f"EqualTo(term,{term})" in scans[0], scans[0]
+    # the unfiltered view still scans every block
+    assert "PushedFilters: []" in scan_filters(idx.blocks)[0]

@@ -108,14 +108,19 @@ def test_streaming_incremental_build_matches_batch(spark):
 
 def test_compaction_preserves_postings_and_ranking(spark):
     """Streamed index (one small doc range per micro-batch) -> compact
-    under a larger docs_per_range -> identical postings, identical
-    WAND results, fewer ranges."""
+    under a larger docs_per_range -> identical postings (positions
+    included), identical WAND and phrase results, fewer ranges."""
     import glob
     import os
 
     from snowplow_elasticsearch_loader_spark.config import EngineConfig, IndexConfig
     from snowplow_elasticsearch_loader_spark.index_store import compact_index, InvertedIndex
     from snowplow_elasticsearch_loader_spark.operators import wand
+    from snowplow_elasticsearch_loader_spark.operators.phrase import phrase_topk
+
+    def postings(ix):
+        rows = ix.postings().select("term", "doc_id", "tf", "positions").collect()
+        return sorted((r[0], r[1], r[2], tuple(r[3])) for r in rows)
 
     in_dir = tempfile.mkdtemp(prefix="compact-in-")
     idx_dir = tempfile.mkdtemp(prefix="compact-idx-")
@@ -133,10 +138,13 @@ def test_compaction_preserves_postings_and_ranking(spark):
         shutil.rmtree(in_dir + "/b0"), shutil.rmtree(in_dir + "/b1")
         incremental_index_build(spark, in_dir, idx_dir, cp_dir, small, available_now=True)
         idx = InvertedIndex(spark, idx_dir, small)
-        before = idx.postings().select("term", "doc_id", "tf")
-        before_rows = sorted(map(tuple, before.collect()))
+        before_rows = postings(idx)
+        assert any(len(r[3]) > 1 for r in before_rows)  # positions are compared
         qs = [("c-1", "error the tool"), ("c-2", "agent plan")]
         res_before = wand.wand_topk(idx.blocks, idx.termdict, idx.corpus(), qs, k=5, cfg=small).collect()
+        phrases = [("p-1", "tool the"), ("p-2", "the the tool"), ("p-3", "agent plan")]
+        ph_before = phrase_topk(idx.blocks, idx.termdict, idx.corpus(), phrases, k=10, cfg=small).collect()
+        assert ph_before
         n_ranges_before = idx.blocks.select("range_id").distinct().count()
 
         # min_build_ranges=1: this test asserts the EXPLICIT width is
@@ -148,13 +156,14 @@ def test_compaction_preserves_postings_and_ranking(spark):
             )
         )
         idx2 = compact_index(idx, big)
-        after_rows = sorted(map(tuple, idx2.postings().select("term", "doc_id", "tf").collect()))
-        assert after_rows == before_rows
+        assert postings(idx2) == before_rows
         n_ranges_after = idx2.blocks.select("range_id").distinct().count()
         assert n_ranges_after < n_ranges_before
         res_after = wand.wand_topk(idx2.blocks, idx2.termdict, idx2.corpus(), qs, k=5, cfg=big).collect()
         key = lambda rows: sorted((r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows)
         assert key(res_after) == key(res_before)
+        ph_after = phrase_topk(idx2.blocks, idx2.termdict, idx2.corpus(), phrases, k=10, cfg=big)
+        assert key(ph_after.collect()) == key(ph_before)
         # compaction checkpointed
         assert "compact" in {r["stage"] for r in idx2.checkpoints.collect()}
         # rename-free commit: versioned dirs + manifest pointer, no
@@ -168,7 +177,7 @@ def test_compaction_preserves_postings_and_ranking(spark):
         idx3 = compact_index(idx2, big, gc_grace_sec=0.0)
         assert os.path.isdir(os.path.join(idx_dir, "blocks_v2"))
         assert not os.path.exists(os.path.join(idx_dir, "blocks_v1"))
-        assert sorted(map(tuple, idx3.postings().select("term", "doc_id", "tf").collect())) == before_rows
+        assert postings(idx3) == before_rows
     finally:
         for d in (in_dir, idx_dir, cp_dir):
             shutil.rmtree(d, ignore_errors=True)
@@ -726,5 +735,127 @@ def test_stream_state_scan_raises_on_unreadable_docstats(spark):
             process_stream_batch(
                 spark, tr.filter(F.col("conv_id") >= "conv-00000003"), 1, idx_dir, SCFG
             )
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
+
+
+def _two_batch_stream(spark, idx_dir, cfg):
+    """Two finalized micro-batches of synth_transcripts(12, seed=21)."""
+    from snowplow_elasticsearch_loader_spark.streaming.stream_build import (
+        finalize_streamed_index,
+    )
+
+    tr = synth_transcripts(spark, n_convs=12, seed=21, with_anomalies=False)
+    process_stream_batch(spark, tr.filter(F.col("conv_id") < "conv-00000006"), 0, idx_dir, cfg)
+    process_stream_batch(spark, tr.filter(F.col("conv_id") >= "conv-00000006"), 1, idx_dir, cfg)
+    finalize_streamed_index(spark, idx_dir, cfg)
+
+
+def test_compacted_stream_equals_build_blocks_only(spark):
+    """Compaction rebuilds through the build's own range builder:
+    compacting a streamed index gives the blocks build_blocks_only
+    writes over its live documents under the same config, equal row for
+    row in every column, bytes included."""
+    from snowplow_elasticsearch_loader_spark.index_store import (
+        InvertedIndex,
+        build_blocks_only,
+        compact_index,
+    )
+    from snowplow_elasticsearch_loader_spark.operators.index_build import BLOCKS_SCHEMA
+
+    small = EngineConfig(index=IndexConfig(block_size=8, docs_per_range=128, term_buckets=8))
+    big = EngineConfig(index=IndexConfig(block_size=16, docs_per_range=1024, term_buckets=4))
+    idx_dir = tempfile.mkdtemp(prefix="compact-eq-idx-")
+    ref_dir = tempfile.mkdtemp(prefix="compact-eq-ref-")
+    try:
+        _two_batch_stream(spark, idx_dir, small)
+        idx = compact_index(InvertedIndex(spark, idx_dir, small), big)
+        ref = build_blocks_only(spark, idx.live_documents().select("doc_id", "text"), ref_dir, big)
+
+        def rows(ix):
+            pdf = ix.blocks.select(*BLOCKS_SCHEMA.fieldNames()).toPandas()
+            return pdf.sort_values(["term", "block_id"]).reset_index(drop=True)
+
+        got, want = rows(idx), rows(ref)
+        assert len(got) > 0
+        assert got.equals(want)
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
+        shutil.rmtree(ref_dir, ignore_errors=True)
+
+
+def test_compaction_refuses_uncommitted_stream_batch(spark, monkeypatch):
+    """A micro-batch that crashed after its documents write leaves a
+    batch_seg doc partition with no stream_batch checkpoint. Compaction
+    rebuilds from the doc store, so it must refuse until the batch is
+    replayed; after the replay it compacts every document."""
+    import os
+
+    from snowplow_elasticsearch_loader_spark.index_store import InvertedIndex, compact_index
+    from snowplow_elasticsearch_loader_spark.operators import index_build
+    from snowplow_elasticsearch_loader_spark.streaming.stream_build import (
+        finalize_streamed_index,
+    )
+
+    idx_dir = tempfile.mkdtemp(prefix="compact-uncommitted-")
+    try:
+        tr = synth_transcripts(spark, n_convs=8, seed=31, with_anomalies=False)
+        first = tr.filter(F.col("conv_id") < "conv-00000004")
+        second = tr.filter(F.col("conv_id") >= "conv-00000004")
+        process_stream_batch(spark, first, 0, idx_dir, SCFG)
+
+        def crash(*a, **k):
+            raise RuntimeError("injected crash before the blocks write")
+
+        with monkeypatch.context() as m:
+            m.setattr(index_build, "build_blocks_df", crash)
+            with pytest.raises(RuntimeError, match="injected"):
+                process_stream_batch(spark, second, 1, idx_dir, SCFG)
+        finalize_streamed_index(spark, idx_dir, SCFG)
+        with pytest.raises(ValueError, match=r"\[1\].*replay that batch"):
+            compact_index(InvertedIndex(spark, idx_dir, SCFG), SCFG)
+        assert not os.path.exists(os.path.join(idx_dir, "_manifest.json"))
+
+        process_stream_batch(spark, second, 1, idx_dir, SCFG)  # the replay
+        finalize_streamed_index(spark, idx_dir, SCFG)
+        idx = compact_index(InvertedIndex(spark, idx_dir, SCFG), SCFG)
+        indexed = {r[0] for r in idx.postings().select("doc_id").distinct().collect()}
+        nonempty = idx.docstats.filter(F.col("doclen") > 0).select("doc_id")
+        assert indexed == {r[0] for r in nonempty.collect()}
+        replayed = idx.documents.filter(F.col("batch_seg") == 1).select("doc_id")
+        assert {r[0] for r in replayed.collect()} & indexed
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
+
+
+def test_compaction_state_write_failure_keeps_manifest(spark, monkeypatch):
+    """The streamed max-range-id guard is restated before the manifest
+    flip, and a failed restatement fails the compaction: the manifest
+    keeps pointing at the old blocks, so no later micro-batch can land
+    on compacted ranges under a stale guard. A successful compaction
+    never lowers the guard."""
+    import json
+    import os
+
+    from snowplow_elasticsearch_loader_spark.index_store import InvertedIndex, compact_index
+    from snowplow_elasticsearch_loader_spark.streaming import stream_build
+
+    idx_dir = tempfile.mkdtemp(prefix="compact-state-")
+    state_file = os.path.join(idx_dir, "_stream_state.json")
+    try:
+        _two_batch_stream(spark, idx_dir, SCFG)
+        guard = json.load(open(state_file))["after"]["max_rid"]
+        idx = compact_index(InvertedIndex(spark, idx_dir, SCFG), SCFG)
+        man_path = os.path.join(idx_dir, "_manifest.json")
+        version = json.load(open(man_path))["version"]
+        assert json.load(open(state_file))["after"]["max_rid"] >= guard
+
+        def fail(*a, **k):
+            raise OSError("injected state write failure")
+
+        monkeypatch.setattr(stream_build, "_write_state", fail)
+        with pytest.raises(OSError, match="injected"):
+            compact_index(idx, SCFG)
+        assert json.load(open(man_path))["version"] == version
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)
