@@ -18,8 +18,13 @@ block-max WAND fast path, and the numpy oracle:
   numpy twin ``contrib_np``, which share the IEEE expression tree and so
   agree bit for bit. Every engine path calls one of them; only the
   DuckDB reference SQL restates it;
-- per-doc accumulation sums contributions in ascending-term order via
-  ``F.aggregate`` over a sorted array — bit-exact at any parallelism;
+- one accumulation order: a doc's contributions fold left from 0.0 in
+  ascending term order, ``((0.0 + c0) + c1) + c2 ...``. The Spark path
+  (``_sum_in_term_order``: ``F.aggregate`` over a term-sorted array),
+  every numpy scorer (``DenseAccumulator``: wand, phrase and the
+  ``QueryEngine`` coordinator) and the oracle (``oracle/bm25.py``) all
+  sum this way, so they give the same score bits at any term count and
+  any parallelism;
 - ranking quantizes scores to 1e-6 (ties then break on doc_id asc),
   the same contract the DuckDB oracle implements.
 
@@ -48,6 +53,7 @@ from __future__ import annotations
 import math
 from typing import Iterable, Mapping, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,8 +88,6 @@ def quantize_doclen_col(col_name: str = "doclen"):
 def quantize_doclen_np(dl):
     """numpy twin of quantize_doclen_col (used in the WAND evaluator).
     bit width via frexp's exact exponent."""
-    import numpy as np
-
     dli = dl.astype(np.int64)
     _, exp = np.frexp(dli)
     s = np.maximum(exp - 4, 0)
@@ -185,6 +189,41 @@ def _sum_in_term_order(cand: DataFrame, avgdl: float, cfg: EngineConfig) -> Data
             ).alias("score"),
         )
     )
+
+
+class DenseAccumulator:
+    """numpy twin of ``_sum_in_term_order``: per-doc sums over one
+    float64 array ``acc`` indexed by doc id (8 B per addressable doc).
+
+    ``sum(docs, contribs)`` folds left from 0.0, ``acc[d] += c`` for
+    each (doc, contribution) array pair in the order given, so callers
+    pass them in ascending term order. Fancy-indexed ``+=`` is exact
+    only when an array names each doc at most once, which holds for one
+    block and for one term's postings. Every contribution is > 0
+    (qtf * idf > 0, tf >= 1), so a slot that still reads 0.0 has not
+    been touched yet; between calls every slot is 0.0, and a call
+    resets only the slots it touched."""
+
+    def __init__(self, n: int = 0) -> None:
+        self.acc = np.zeros(n)
+
+    def reserve(self, n: int) -> None:
+        """Make doc ids ``< n`` addressable (growth at least doubles)."""
+        if n > self.acc.size:
+            self.acc = np.zeros(max(n, 2 * self.acc.size))
+
+    def sum(self, docs: list, contribs: list) -> tuple[np.ndarray, np.ndarray]:
+        """(doc, score) of every doc in ``docs``, in first-touch order."""
+        acc = self.acc
+        touched = []
+        for d, c in zip(docs, contribs):
+            cur = acc[d]
+            touched.append(d[cur == 0.0])
+            acc[d] = cur + c
+        doc = np.concatenate(touched)
+        score = acc[doc]
+        acc[doc] = 0.0
+        return doc, score
 
 
 def topk(scored: DataFrame, k: int) -> DataFrame:

@@ -71,15 +71,15 @@ def make_phrase_evaluator(
     queries."""
 
     def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("term", kind="stable")  # the fold's term order
         term = pdf["term"]
-        _, codes = np.unique(term.to_numpy(), return_inverse=True)
         pos_parts = [bytes(x) if x is not None else b"" for x in pdf["pos_varint"]]
         if not all(pos_parts):
             raise ValueError(
                 "phrase search requires a positional index "
                 "(index.store_positions was off at build time)"
             )
-        cuts, doc, tf, dl = _unpack_range(pdf, quantize)
+        cuts, base, doc, tf, dl, acc = _unpack_range(pdf, quantize)
         pos = codec.unpack_positions(b"".join(pos_parts), tf)
         pcuts = np.cumsum(tf)[cuts - 1]  # position offsets of the block starts
         docs, tfs, dls = (np.split(a, cuts) for a in (doc, tf.astype(np.float64), dl))
@@ -108,7 +108,7 @@ def make_phrase_evaluator(
             w = [terms_q[t][0] for t in term.iloc[rows]]
             d, s = _range_topk(
                 *_score_docs(
-                    codes[rows],
+                    acc,
                     [docs[i] for i in rows],
                     lambda j: contrib_np(w[j], tfs[rows[j]], dls[rows[j]], avgdl, k1, b),
                     matched,
@@ -117,7 +117,7 @@ def make_phrase_evaluator(
             )
             if d.size:
                 qids.append(qid)
-                out_d.append(d)
+                out_d.append(d + base)
                 out_s.append(s)
         return _result_frame(qids, out_d, out_s)
 

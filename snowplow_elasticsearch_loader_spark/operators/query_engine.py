@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
 from ..index_store import InvertedIndex
-from .bm25 import analyze_queries, contrib_np, doclen_np, idf as idf_fn
-from .wand import SEARCH_SCHEMA, _exact_scores, empty_search_result, wand_topk
+from .bm25 import DenseAccumulator, analyze_queries, contrib_np, doclen_np, idf as idf_fn
+from .wand import SEARCH_SCHEMA, empty_search_result, wand_topk
 
 #: most candidate blocks a call may gather to be scored in the driver
 #: (serving mode); larger calls run the distributed ``wand_topk``
@@ -43,59 +43,6 @@ DRIVER_EVAL_MAX_BLOCKS = 50_000
 BLOCK_CACHE_MAX_BYTES = 256 << 20
 #: largest term dictionary a warm engine collects into the driver
 WARM_MAX_TERMS = 5_000_000
-
-#: most addends per doc for which ``np.add.reduceat`` (and so
-#: ``_exact_scores``) sums sequentially; past it numpy sums pairwise
-SEQUENTIAL_SUM_MAX_ADDENDS = 8
-
-
-class DenseAccumulator:
-    """Per-doc score accumulator over direct-addressed scratch arrays.
-
-    ``first`` (float64), ``rest`` (float64) and ``seen`` (bool) are
-    indexed by doc id, so they cost ~17 B per doc of the largest doc id
-    reserved. Between calls every ``rest`` slot is 0.0 and every
-    ``seen`` slot False; a call resets only the slots it touched.
-
-    A doc's score is ``first + rest`` where ``first`` is its first
-    contribution and ``rest`` sums the others sequentially from 0.0.
-    That is exactly what ``np.add.reduceat`` computes for a segment of
-    at most ``SEQUENTIAL_SUM_MAX_ADDENDS`` addends, so the scores are
-    bit-identical to ``_exact_scores`` up to that many terms."""
-
-    def __init__(self) -> None:
-        self.first = np.zeros(0)
-        self.rest = np.zeros(0)
-        self.seen = np.zeros(0, dtype=bool)
-
-    def reserve(self, n: int) -> None:
-        """Make doc ids ``< n`` addressable (growth at least doubles)."""
-        if n > self.seen.size:
-            n = max(n, 2 * self.seen.size)
-            self.first = np.zeros(n)
-            self.rest = np.zeros(n)
-            self.seen = np.zeros(n, dtype=bool)
-
-    def sum(self, docs: list, contribs: list) -> tuple[np.ndarray, np.ndarray]:
-        """(doc, score) of every doc in ``docs``; per-term arrays in
-        ascending term order, each naming a doc at most once."""
-        first, rest, seen = self.first, self.rest, self.seen
-        touched = []
-        for d, c in zip(docs, contribs):
-            old = seen[d]
-            if old.any():
-                rest[d[old]] += c[old]
-                new = ~old
-                d, c = d[new], c[new]
-            first[d] = c
-            seen[d] = True
-            touched.append(d)
-        doc = np.concatenate(touched)
-        score = first[doc] + rest[doc]
-        rest[doc] = 0.0
-        seen[doc] = False
-        return doc, score
-
 
 class QueryEngine:
     def __init__(
@@ -137,7 +84,7 @@ class QueryEngine:
         # coordinator-eval cap: a point query whose candidate posting
         # blocks fit comfortably in the driver is answered by gathering
         # them (one pruned scan job) and scoring them in-process with
-        # wand's contribution and accumulation order — no shuffle, no
+        # the one contribution and accumulation order — no shuffle, no
         # python-worker round trip, no window stage. This is the
         # search-engine coordinator pattern (shards return postings,
         # coordinator merges); bigger queries run ``wand_topk``.
@@ -255,14 +202,13 @@ class QueryEngine:
         work drops to pure float scoring over the arrays). Budget
         accounting uses the decoded array bytes.
 
-        Scoring runs on the engine's ``DenseAccumulator``: three scratch
-        arrays indexed by doc id (~17 B x the largest decoded doc id,
-        grown at decode time), summed per term with no sort. A query
-        with more than ``SEQUENTIAL_SUM_MAX_ADDENDS`` scored terms falls
-        back to ``_exact_scores``, whose numpy sum turns pairwise there.
-        The queries are walked in query_id order and each returns its
-        ranked top-k, so the call builds one Arrow table with no re-sort
-        and hands it to Spark in one ``createDataFrame``."""
+        Scoring runs on the engine's ``bm25.DenseAccumulator``: one
+        float64 array indexed by doc id (8 B x the largest decoded doc
+        id, grown at decode time), folded per term in ascending term
+        order with no sort, for any number of terms. The queries are
+        walked in query_id order and each returns its ranked top-k, so
+        the call builds one Arrow table with no re-sort and hands it to
+        Spark in one ``createDataFrame``."""
         hit_terms = sorted(t for t in {t for _, t, _ in qrows} if t in tmap)
         needed = set(hit_terms)
         qdecs: dict[str, tuple] = {}
@@ -308,8 +254,8 @@ class QueryEngine:
         qids, docs, scores = [], [], []
         for qid in sorted(by_query):
             wmap = by_query[qid]
-            # ascending term order is the (doc, term) accumulation order
-            # of the distributed evaluator, so the scores are bit-identical
+            # ascending term order is the one accumulation order, so the
+            # scores are bit-identical to every other path
             terms_q = [t for t in sorted(wmap) if qdecs[t][0].size]
             if not terms_q:
                 continue
@@ -417,14 +363,7 @@ class QueryEngine:
         callers and wrappers that pass it positionally."""
         k1, b = self.cfg.bm25.k1, self.cfg.bm25.b
         contribs = [contrib_np(w, tf, dl, self.avgdl, k1, b) for (_, tf, dl), w in zip(decs, ws)]
-        if len(decs) <= SEQUENTIAL_SUM_MAX_ADDENDS:
-            d, s = self._acc.sum([dec[0] for dec in decs], contribs)
-        else:
-            d, s = _exact_scores(
-                np.concatenate([dec[0] for dec in decs]),
-                np.repeat(np.arange(len(decs)), [dec[0].size for dec in decs]),
-                np.concatenate(contribs),
-            )
+        d, s = self._acc.sum([dec[0] for dec in decs], contribs)
         key = np.round(s, 6)
         if 0 < k < key.size:
             keep = key >= np.partition(key, key.size - k)[key.size - k]

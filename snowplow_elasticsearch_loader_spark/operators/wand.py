@@ -21,24 +21,21 @@ of the classic pointer-walking WAND loop (which would be per-row
 Python): compute every doc's score upper bound from per-block
 avgdl-independent stats (``max_tf``, ``min_dl`` — the bound is
 evaluated with the query-time avgdl, so streamed/merged blocks never
-carry a stale bound) with a segment reduce, establish a threshold from
-exactly-scored highest-bound docs, and only then score the docs that
-can still make top-k. Safety argument: a doc with
+carry a stale bound) summed per doc by the range's accumulator,
+establish a threshold from exactly-scored highest-bound docs, and only
+then score the docs that can still make top-k. Safety argument: a doc with
 ``ub < t`` satisfies ``score <= ub < t <= kth_best``, so exclusion can
 never change the top-k set or its ranking.
 
 Every contribution here, block upper bounds included, is
 ``bm25.contrib_np``, the numpy twin of the naive path's
 ``bm25.contrib_col``: the one home of the BM25 formula, so both paths
-share idf doubles and the IEEE expression tree. Every numpy scorer
-(this evaluator, ``phrase.py``, the ``QueryEngine`` coordinator path)
-sums a doc's contributions in ascending term order in the order
-``_exact_scores`` pins. That order is not the naive path's: its
-``F.aggregate`` folds left from 0.0 over the term-sorted contributions,
-while numpy adds the first contribution to a sequential sum of the
-rest and turns pairwise past 8 contributions. The two can differ in
-the last bits, so after rounding to 6 places they agree unless a score
-sits on a rounding boundary.
+share idf doubles and the IEEE expression tree. Every sum, block
+upper bounds included, runs through one ``bm25.DenseAccumulator`` per
+range, indexed by the doc id minus the range's smallest, over the
+blocks in ascending term order: the naive path's fold, bit for bit.
+Bounds and exact scores fold in the same order and IEEE addition is
+monotone, so each doc's bound is >= its exact score, bit for bit.
 """
 
 from __future__ import annotations
@@ -51,7 +48,7 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions import codec
-from .bm25 import analyze_queries, contrib_np, doclen_np, idf as idf_fn, topk
+from .bm25 import DenseAccumulator, analyze_queries, contrib_np, doclen_np, idf as idf_fn, topk
 
 #: block columns the BM25 evaluator needs (column pruning contract —
 #: positional payloads and block metadata never cross the Arrow boundary)
@@ -89,39 +86,18 @@ def empty_search_result(spark) -> DataFrame:
     return spark.createDataFrame([], schema=SEARCH_SCHEMA)
 
 
-def _exact_scores(
-    doc: np.ndarray, term_code: np.ndarray, contrib: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Sum contributions per doc in (doc, ascending term) order —
-    the shared accumulation contract.
-
-    ``np.add.reduceat`` fixes the order within a doc: for contributions
-    ``c0..cn`` it computes ``c0 + (((0.0 + c1) + c2) + ... + cn)`` when
-    there are at most 8 of them, and ``c0 + pairwise(c1..cn)`` (numpy's
-    8-way unrolled pairwise sum) beyond that.
-    ``tests/test_dense_scoring.py`` pins both cases, and the
-    ``QueryEngine`` dense accumulator reproduces the first."""
-    order = np.lexsort((term_code, doc))
-    d, c = doc[order], contrib[order]
-    starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
-    return d[starts], np.add.reduceat(c, starts)
-
-
-def _score_docs(codes, docs: list, contrib, targets: np.ndarray):
+def _score_docs(acc: DenseAccumulator, docs: list, contrib, targets: np.ndarray):
     """Exact (doc, score) of the ``targets`` docs over one query's
-    blocks: block ``j`` holds term code ``codes[j]`` and doc ids
+    blocks in ascending term order: block ``j`` holds doc ids
     ``docs[j]``, and ``contrib(j)`` gives its per-posting contributions.
     ``contrib`` runs only for blocks that hold a target."""
-    rows_d, rows_c, rows_t = [], [], []
+    rows_d, rows_c = [], []
     for j, d in enumerate(docs):
         mask = np.isin(d, targets)
         if mask.any():
             rows_d.append(d[mask])
             rows_c.append(contrib(j)[mask])
-            rows_t.append(np.full(int(mask.sum()), codes[j], dtype=np.int32))
-    if not rows_d:
-        return np.empty(0, np.int64), np.empty(0)
-    return _exact_scores(np.concatenate(rows_d), np.concatenate(rows_t), np.concatenate(rows_c))
+    return acc.sum(rows_d, rows_c)
 
 
 def _range_topk(doc: np.ndarray, score: np.ndarray, k: int):
@@ -147,13 +123,19 @@ def _result_frame(qids: list, docs: list, scores: list) -> pd.DataFrame:
 
 def _unpack_range(pdf: pd.DataFrame, quantize: bool) -> tuple:
     """A range's block rows, decoded in one ``codec.unpack_blocks``:
-    (cuts, doc int64, tf int64, dl float64-quantized), the arrays flat
-    over the range and ``cuts`` the offsets where blocks 1.. start."""
+    (cuts, base, doc int64, tf int64, dl float64-quantized, acc). The
+    arrays are flat over the range and ``cuts`` are the offsets where
+    blocks 1.. start. ``doc`` counts from the range's smallest doc id
+    ``base``, so the range's ``DenseAccumulator`` ``acc`` is at most
+    one range wide."""
     cnt = codec.block_sizes(pdf["docs_varint"])
     doc, tf, dl = codec.unpack_blocks(
         cnt, pdf["docs_varint"], pdf["tfs_varint"], pdf["dls_varint"]
     )
-    return np.cumsum(cnt)[:-1], doc, tf, doclen_np(dl, quantize)
+    base = int(doc.min())
+    doc = doc - base
+    acc = DenseAccumulator(int(doc.max()) + 1)
+    return np.cumsum(cnt)[:-1], base, doc, tf, doclen_np(dl, quantize), acc
 
 
 def make_wand_evaluator(
@@ -171,9 +153,9 @@ def make_wand_evaluator(
     qterms join, and are decoded once for all queries."""
 
     def evaluate(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("term", kind="stable")  # the fold's term order
         term = pdf["term"]
-        _, codes = np.unique(term.to_numpy(), return_inverse=True)
-        cuts, doc, tf, dl = _unpack_range(pdf, quantize)
+        cuts, base, doc, tf, dl, acc = _unpack_range(pdf, quantize)
         docs, tfs, dls = (np.split(a, cuts) for a in (doc, tf.astype(np.float64), dl))
         max_tf = pdf["max_tf"].to_numpy(np.float64)
         # quantization is monotone, so q(min_dl) still lower-bounds
@@ -191,7 +173,7 @@ def make_wand_evaluator(
 
             def score(targets):
                 return _score_docs(
-                    codes[rows], qdocs,
+                    acc, qdocs,
                     lambda j: contrib_np(w[j], tfs[rows[j]], dls[rows[j]], avgdl, k1, b),
                     targets,
                 )
@@ -202,11 +184,8 @@ def make_wand_evaluator(
             # of the block under the CURRENT avgdl — safe even when blocks
             # were built while the corpus (and its avgdl) was growing
             # (streamed micro-batches).
-            sizes = [d.size for d in qdocs]
             ubs = contrib_np(w, max_tf[rows], min_dl[rows], avgdl, k1, b)
-            u_doc, doc_ub = _exact_scores(  # segment-sum of the bounds
-                np.concatenate(qdocs), np.repeat(codes[rows], sizes), np.repeat(ubs, sizes)
-            )
+            u_doc, doc_ub = acc.sum(qdocs, [np.full(d.size, u) for d, u in zip(qdocs, ubs)])
             if u_doc.size > 4 * k:
                 # threshold: the kth-best exact score of the 4k
                 # highest-bound docs, a lower bound on the final kth-best
@@ -220,7 +199,7 @@ def make_wand_evaluator(
             d, s = _range_topk(*score(u_doc), k)
             if d.size:
                 qids.append(qid)
-                out_d.append(d)
+                out_d.append(d + base)
                 out_s.append(s)
         return _result_frame(qids, out_d, out_s)
 

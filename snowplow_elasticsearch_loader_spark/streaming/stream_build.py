@@ -13,8 +13,6 @@ refresh:
   then a finalize pass rebuilds termdict/corpus. With
   ``Trigger.AvailableNow`` this is an incremental catch-up job; with a
   continuous trigger it is a live index maintainer.
-- ``streaming_rollup``: watermarked windowed aggregation over event
-  time (the loader's latency metrics analog, core/Metrics.scala:40-45).
 
 Micro-batch appends reuse the SAME block builder as the batch path, so
 streamed and batch-built indexes decode to identical postings when fed
@@ -488,20 +486,3 @@ def finalize_streamed_index(
     )
     return InvertedIndex(spark, index_dir, cfg)
 
-
-def streaming_rollup(
-    spark: SparkSession,
-    input_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Watermarked windowed counts by role over event time; returns a
-    streaming DataFrame ready for writeStream (tests run it with
-    availableNow into a memory sink)."""
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("role"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(F.col("w.start").alias("window_start"), "role", "n_turns")
-    )

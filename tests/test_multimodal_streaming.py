@@ -15,7 +15,6 @@ from snowplow_elasticsearch_loader_spark.sources.transcripts import synth_transc
 from snowplow_elasticsearch_loader_spark.streaming.stream_build import (
     incremental_index_build,
     process_stream_batch,
-    streaming_rollup,
 )
 
 SCFG = EngineConfig(index=IndexConfig(block_size=16, docs_per_range=512, term_buckets=8))
@@ -181,89 +180,6 @@ def test_compaction_preserves_postings_and_ranking(spark):
     finally:
         for d in (in_dir, idx_dir, cp_dir):
             shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stateful_session_tracking_across_batches(spark):
-    """applyInPandasWithState: per-conversation state must accumulate
-    across micro-batches (a conversation split across two files)."""
-    import glob
-    import os
-
-    from snowplow_elasticsearch_loader_spark.streaming.stateful import (
-        conversation_sessions,
-    )
-
-    in_dir = tempfile.mkdtemp(prefix="stateful-in-")
-    try:
-        tr = synth_transcripts(spark, n_convs=6, seed=17, with_anomalies=False)
-        # split each conversation: even turn_idx in batch 0, odd in batch 1
-        tr.filter(F.col("turn_idx") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(in_dir + "/b0")
-        tr.filter(F.col("turn_idx") % 2 == 1).coalesce(1).write.mode("overwrite").parquet(in_dir + "/b1")
-        files = sorted(glob.glob(in_dir + "/b*/part-*.parquet"))
-        for i, f in enumerate(files):
-            os.rename(f, os.path.join(in_dir, f"{i:04d}.parquet"))
-        shutil.rmtree(in_dir + "/b0"), shutil.rmtree(in_dir + "/b1")
-
-        q = (
-            conversation_sessions(spark, in_dir)
-            .writeStream.format("memory")
-            .queryName("sessions_test")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        updates = spark.sql("select * from sessions_test").toPandas()
-        # final state per conv = the row with max turns_seen
-        final = updates.sort_values("turns_seen").groupby("conv_id").last()
-        expected = (
-            tr.groupBy("conv_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("role") == "tool").cast("long")).alias("tools"),
-                F.min("ts").alias("mn"),
-                F.max("ts").alias("mx"),
-            )
-            .collect()
-        )
-        for r in expected:
-            row = final.loc[r["conv_id"]]
-            assert int(row["turns_seen"]) == r["n"], r["conv_id"]
-            assert int(row["tool_turns"]) == r["tools"]
-            assert row["first_ts"].to_pydatetime() == r["mn"]
-            assert row["last_ts"].to_pydatetime() == r["mx"]
-        # state genuinely crossed batches: >1 update row for some conv
-        assert (updates.groupby("conv_id").size() > 1).any()
-    finally:
-        shutil.rmtree(in_dir, ignore_errors=True)
-
-
-def test_streaming_rollup_watermarked(spark):
-    in_dir = tempfile.mkdtemp(prefix="stream-roll-")
-    try:
-        tr = synth_transcripts(spark, n_convs=10, seed=3, with_anomalies=False)
-        tr.coalesce(1).write.mode("overwrite").parquet(in_dir)
-        q = (
-            streaming_rollup(spark, in_dir, window="6 hours", watermark="1 hour")
-            .writeStream.format("memory")
-            .queryName("rollup_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows = spark.sql("select * from rollup_test").collect()
-        # append mode emits only watermark-closed windows; with
-        # availableNow over a finite source the final windows stay open,
-        # so assert the plan ran and produced a well-typed result
-        assert {f.name for f in spark.table("rollup_test").schema.fields} == {
-            "window_start",
-            "role",
-            "n_turns",
-        }
-        assert all(r["n_turns"] > 0 for r in rows)
-    finally:
-        shutil.rmtree(in_dir, ignore_errors=True)
 
 
 def test_streamed_block_bounds_safe_under_doclen_skew(spark):
